@@ -21,8 +21,8 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
 def entry(spark: SparkSession) -> DataFrame:
-    """Flagship query: the full quality-filter pipeline (rules + all
-    four Arrow UDFs + dup-rank + keep verdict) over the deterministic
+    """Flagship query: the full quality-filter pipeline (rules + the
+    fused Arrow UDF + dup-rank + keep verdict) over the deterministic
     synthetic images table at sf0.001, joined against the sf0.001
     fixture-scan smoke (rows > 0, stable schema).
 

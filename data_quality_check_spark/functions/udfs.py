@@ -1,19 +1,23 @@
-"""Vectorized pandas/Arrow UDFs (SURVEY.md §2 O-10..O-13).
+"""The one vectorized pandas/Arrow UDF (SURVEY.md §2 O-10..O-13).
 
-All four UDFs are batched Arrow transfers — no per-row Python at the
-Spark level (BASELINE.json:15).  The scalar-iterator form is used so
-models (langid bigram tensor, perplexity trigram tensor, compiled
-regexes) are touched once per Python worker, not once per batch
-element.  The actual math lives in kernels/* and is shared verbatim
-with the pandas oracle.
+`pipeline_udf` is a thin Arrow boundary around
+kernels/verdict.py::model_verdict, the per-row model verdict the
+pandas oracle calls too: one ArrowEvalPython stage, one Python worker
+per task, no per-row Python at the Spark level (BASELINE.json:15).
+The scalar-iterator form touches the models (langid bigram tensor,
+perplexity trigram tensor, compiled regexes) once per worker, not
+once per batch.  Callers that only need some fields select them from
+the struct; text-only callers bind null image columns via
+`text_verdict`, which skips decode.
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
+from pyspark.sql import Column
+from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import (
     BooleanType,
@@ -28,16 +32,13 @@ from pyspark.sql.types import (
 
 # StructType objects (not DDL strings): DDL parsing at decoration time
 # would require an active SparkSession at import.
-LANGID_SCHEMA = StructType([
+FULL_SCHEMA = StructType([
     StructField("lang", StringType()),
     StructField("lang_conf", DoubleType()),
-])
-SCRUB_SCHEMA = StructType([
+    StructField("ppl", DoubleType()),
     StructField("caption_scrubbed", StringType()),
     StructField("scrub_hits", MapType(StringType(), IntegerType())),
     StructField("toxic", BooleanType()),
-])
-DECODE_SCHEMA = StructType([
     StructField("pixel_ok", BooleanType()),
     StructField("psnr_db", DoubleType()),
     StructField("w_real", IntegerType()),
@@ -46,148 +47,18 @@ DECODE_SCHEMA = StructType([
 ])
 
 
-@pandas_udf(LANGID_SCHEMA)
-def langid_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    from ..kernels.langid import classify  # model built once per worker
-
-    for captions in it:
-        yield classify(captions.fillna(""))
-
-
-@pandas_udf(DoubleType())
-def ppl_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    from ..kernels.ppl import perplexity
-
-    for captions in it:
-        yield pd.Series(perplexity(captions.fillna("")))
-
-
-@pandas_udf(SCRUB_SCHEMA)
-def scrub_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    from ..kernels.scrub import scrub_series
-
-    for captions in it:
-        yield scrub_series(captions)
-
-
-TEXT_SCHEMA = StructType([
-    StructField("lang", StringType()),
-    StructField("lang_conf", DoubleType()),
-    StructField("ppl", DoubleType()),
-    StructField("caption_scrubbed", StringType()),
-    StructField("scrub_hits", MapType(StringType(), IntegerType())),
-    StructField("toxic", BooleanType()),
-])
-
-
-@pandas_udf(TEXT_SCHEMA)
-def text_udf(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-    """Fused langid + perplexity + scrub: scalar-iter pandas UDFs are
-    NOT fused by Spark (each becomes its own ArrowEvalPython stage +
-    Python worker), so the pipeline ships the caption to Python once
-    and runs all three kernels on that batch."""
-    from ..kernels.langid import classify
-    from ..kernels.ppl import perplexity
-    from ..kernels.scrub import scrub_series
-
-    for captions in it:
-        filled = captions.fillna("")
-        lid = classify(filled)
-        out = scrub_series(captions)
-        out.insert(0, "lang", lid["lang"])
-        out.insert(1, "lang_conf", lid["lang_conf"])
-        out.insert(2, "ppl", perplexity(filled))
-        yield out
-
-
-FULL_SCHEMA = StructType(TEXT_SCHEMA.fields + DECODE_SCHEMA.fields)
-
-
 @pandas_udf(FULL_SCHEMA)
 def pipeline_udf(
     it: Iterator[tuple[pd.Series, pd.Series, pd.Series, pd.Series, pd.Series, pd.Series]],
 ) -> Iterator[pd.DataFrame]:
-    """(caption, bytes, fmt, w, h, phash) -> full per-row model
-    verdict.  One fused ArrowEvalPython stage: a single Python worker
-    per task (instead of a text + decode chain), one Arrow hop."""
-    from ..kernels.langid import classify
-    from ..kernels.ppl import perplexity
-    from ..kernels.scrub import scrub_series
+    """(caption, bytes, fmt, w, h, phash) -> full per-row model verdict."""
+    from ..kernels.verdict import model_verdict  # models built once per worker
 
     for caption, blob, fmt, w, h, phash in it:
-        filled = caption.fillna("")
-        lid = classify(filled)
-        out = scrub_series(caption)
-        out.insert(0, "lang", lid["lang"])
-        out.insert(1, "lang_conf", lid["lang_conf"])
-        out.insert(2, "ppl", perplexity(filled))
-        dec = _decode_batch(blob, fmt, w, h, phash)
-        for c in dec.columns:
-            out[c] = dec[c].to_numpy()
-        yield out
+        yield model_verdict(caption, blob, fmt, w, h, phash)
 
 
-def _decode_batch(blob: pd.Series, fmt: pd.Series, w: pd.Series,
-                  h: pd.Series, phash: pd.Series) -> pd.DataFrame:
-    from ..kernels import codecs
-
-    n = len(blob)
-    ok = np.zeros(n, dtype=bool)
-    psnr = np.full(n, np.nan)
-    w_real = np.zeros(n, dtype=np.int32)
-    h_real = np.zeros(n, dtype=np.int32)
-    ph_real = np.zeros(n, dtype=np.int64)
-    blobs = blob.to_numpy()
-    fmts = fmt.to_numpy()
-    ws = w.to_numpy()
-    hs = h.to_numpy()
-    phs = phash.to_numpy()
-    for i in range(n):
-        b = blobs[i]
-        if b is None:
-            continue
-        try:
-            pix = codecs.decode(b, fmts[i], int(ws[i]), int(hs[i]))
-        except Exception:
-            continue
-        h_real[i], w_real[i] = pix.shape[0], pix.shape[1]
-        ph_real[i] = codecs.ahash64(pix)
-        # null phash (NaN after to_numpy) must flag the row, not blow
-        # up the whole Arrow task with int(NaN)
-        ok[i] = (
-            h_real[i] == int(hs[i])
-            and w_real[i] == int(ws[i])
-            and not pd.isna(phs[i])
-            and ph_real[i] == int(phs[i])
-        )
-        if ok[i]:
-            # decoder-fidelity PSNR: inf for lossless formats, finite
-            # for lossy ones (production vs reference dequantization);
-            # the keep rule thresholds it at MIN_PSNR_DB
-            try:
-                ref = codecs.decode_ref(b, fmts[i], w_real[i], h_real[i])
-                psnr[i] = np.inf if ref is None else codecs.psnr_db(pix, ref)
-            except Exception:
-                pass  # stays NaN; pixel rule drops via the threshold
-    return pd.DataFrame({
-        "pixel_ok": ok,
-        "psnr_db": psnr,
-        "w_real": w_real,
-        "h_real": h_real,
-        "phash_real": ph_real,
-    })
-
-
-@pandas_udf(DECODE_SCHEMA)
-def decode_udf(
-    it: Iterator[tuple[pd.Series, pd.Series, pd.Series, pd.Series, pd.Series]],
-) -> Iterator[pd.DataFrame]:
-    """(bytes, fmt, w, h, phash) -> decode-invariant verdict.
-
-    Per-image numpy decode inside an Arrow batch; PSNR is taken
-    against the reference decode, which for the lossless sandbox
-    formats is the same pixels => inf dB (BASELINE.json:15 threshold
-    of 40 dB applies to lossy formats on real clusters).
-    """
-    for blob, fmt, w, h, phash in it:
-        yield _decode_batch(blob, fmt, w, h, phash)
+def text_verdict(caption: Column) -> Column:
+    """pipeline_udf over a caption alone: null image columns skip decode."""
+    return pipeline_udf(caption, *(F.lit(None).cast(t) for t in
+                                   ("binary", "string", "int", "int", "long")))

@@ -793,7 +793,6 @@ def phash_band_table(df: DataFrame, max_hamming: int = 3,
     src = (df.select(F.col(id_col).alias("__id"),
                      F.col(phash_col).alias("__ph"))
            .filter(F.col("__ph").isNotNull()))
-    two = two_level or hybrid
 
     def sub_structs(b: int, lo: int, hi: int, bv, band_off: int) -> list:
         out = []

@@ -16,9 +16,10 @@ functions/rules.py.  Spark-first split:
 * pixel statistics need the decoded image, so they run in ONE fused
   Arrow pandas UDF (decode + all statistics in a single
   ArrowEvalPython stage — same single-Python-hop discipline as
-  functions/udfs.py::pipeline_udf), sharing kernels/imgstats.py
-  verbatim with the driver-side numpy oracle (repo-wide shared-kernel
-  invariant: parity is by construction, not by tolerance).
+  functions/udfs.py::pipeline_udf over kernels/verdict.py), sharing
+  kernels/imgstats.py verbatim with the driver-side numpy oracle
+  (repo-wide shared-kernel invariant: parity is by construction, not
+  by tolerance).
 
 Scale notes (10^12 rows): the UDF projects only (bytes, fmt, w, h)
 and emits ~7 scalar doubles — the payload column dies at the map

@@ -62,7 +62,7 @@ def extract_features(images: DataFrame, batch_limit: int = 512) -> DataFrame:
                 chunk = pdf.iloc[start:start + batch_limit]
                 # column-wise numpy access + zip: iterrows() builds a
                 # Series per row and was the slowest path in the UDF
-                # hot loop (same idiom as udfs._decode_batch)
+                # hot loop (same idiom as kernels/verdict.py)
                 ids = chunk["image_id"].to_numpy()
                 blobs = chunk["bytes"].to_numpy()
                 fmts = chunk["fmt"].to_numpy()

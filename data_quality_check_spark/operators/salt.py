@@ -15,22 +15,28 @@ tests/test_properties.py::test_salting_invariant).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..constants import HOT_BUCKET_ALPHA, N_BUCKETS, SALT_FACTOR
 
 
-def with_bucket(df: DataFrame, phash_col: str = "phash",
-                n_buckets: int = N_BUCKETS) -> DataFrame:
+def bucket_expr(phash_col: str = "phash",
+                n_buckets: int = N_BUCKETS) -> Column:
     """O-29: stable checkpoint/audit unit, bucket = pmod(phash, B).
     Null phash maps to bucket 0 (pmod(null) would otherwise yield a
     null bucket that falls outside every checkpoint wave => silent row
-    loss); such rows are also flagged by the null_fields rule."""
-    return df.withColumn(
-        "bucket",
-        F.pmod(F.coalesce(F.col(phash_col), F.lit(0)), F.lit(n_buckets))
-        .cast("int"))
+    loss); such rows are also flagged by the null_fields rule.  The
+    one definition: the checkpoint wave filter re-derives it on the
+    raw scan, and a drifted copy would drop or duplicate rows."""
+    return (F.pmod(F.coalesce(F.col(phash_col), F.lit(0)), F.lit(n_buckets))
+            .cast("int"))
+
+
+def with_bucket(df: DataFrame, phash_col: str = "phash",
+                n_buckets: int = N_BUCKETS) -> DataFrame:
+    """Adds `bucket` (bucket_expr) to df."""
+    return df.withColumn("bucket", bucket_expr(phash_col, n_buckets))
 
 
 def detect_hot_buckets(df: DataFrame, alpha: float = HOT_BUCKET_ALPHA) -> list[int]:

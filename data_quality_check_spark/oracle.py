@@ -34,11 +34,8 @@ from data_quality_check_spark.constants import (
     RULE_TOXIC,
     LANG_UND,
 )
-from data_quality_check_spark.kernels import codecs
-from data_quality_check_spark.kernels.langid import classify
-from data_quality_check_spark.kernels.ppl import perplexity
-from data_quality_check_spark.kernels.scrub import scrub_series
 from data_quality_check_spark.kernels.text import heuristic_stats
+from data_quality_check_spark.kernels.verdict import model_verdict
 
 
 def evaluate(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -62,42 +59,14 @@ def evaluate(pdf: pd.DataFrame) -> pd.DataFrame:
     stopword = stats["stopword_bad"].to_numpy()
     symbol = stats["symbol_bad"].to_numpy()
 
-    lid = classify(cap)
-    lang_bad = (lid["lang"] == LANG_UND).to_numpy()
-
-    ppl = perplexity(cap)
-    ppl_bad = ppl > MAX_PPL
-
-    scrub = scrub_series(cap)
-    toxic = scrub["toxic"].to_numpy()
-
-    # decode invariant
-    pixel_ok = np.zeros(n, dtype=bool)
-    psnr = np.full(n, np.nan)
-    for i in range(n):
-        b, fmt = pdf["bytes"].iloc[i], pdf["fmt"].iloc[i]
-        wv, hv = pdf["w"].iloc[i], pdf["h"].iloc[i]
-        if b is None or pd.isna(wv) or pd.isna(hv):
-            continue
-        w, h = int(wv), int(hv)
-        try:
-            pix = codecs.decode(b, fmt, w, h)
-        except Exception:
-            continue
-        phv = pdf["phash"].iloc[i]
-        ok = (
-            pix.shape[0] == h
-            and pix.shape[1] == w
-            and not pd.isna(phv)
-            and codecs.ahash64(pix) == int(phv)
-        )
-        pixel_ok[i] = ok
-        if ok:
-            try:
-                ref = codecs.decode_ref(b, fmt, pix.shape[1], pix.shape[0])
-                psnr[i] = np.inf if ref is None else codecs.psnr_db(pix, ref)
-            except Exception:
-                pass  # stays NaN; thresholded below
+    # the per-row model verdict: the very function pipeline_udf runs
+    v = model_verdict(cap, pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"],
+                      pdf["phash"])
+    lang_bad = (v["lang"] == LANG_UND).to_numpy()
+    ppl_bad = (v["ppl"] > MAX_PPL).to_numpy()
+    toxic = v["toxic"].to_numpy()
+    pixel_ok = v["pixel_ok"].to_numpy()
+    psnr = v["psnr_db"].to_numpy()
 
     with np.errstate(invalid="ignore"):
         psnr_ok = psnr >= MIN_PSNR_DB
@@ -135,11 +104,11 @@ def evaluate(pdf: pd.DataFrame) -> pd.DataFrame:
         "image_id": pdf["image_id"],
         "keep": ~any_bad,
         "drop_reasons": reasons,
-        "lang": lid["lang"],
-        "lang_conf": lid["lang_conf"],
-        "ppl": ppl,
-        "caption_scrubbed": scrub["caption_scrubbed"],
-        "scrub_hits": scrub["scrub_hits"],
+        "lang": v["lang"],
+        "lang_conf": v["lang_conf"],
+        "ppl": v["ppl"],
+        "caption_scrubbed": v["caption_scrubbed"],
+        "scrub_hits": v["scrub_hits"],
         "pixel_ok": pixel_ok,
         "psnr_db": psnr,
     })

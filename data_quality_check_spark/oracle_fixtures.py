@@ -1,12 +1,13 @@
 """Expected-label fixtures for the UDF-dependent contract keys.
 
-DuckDB cannot run the langid / perplexity / scrub / decode kernels,
-so those keys were rows-only checked.  This module runs the SAME
-pure-pandas reference oracle the F1 gate trusts
-(data_quality_check_spark/oracle.py::evaluate — bit-exact vs the
-pipeline per tests/test_pipeline_vs_oracle.py) over the deterministic
-corpora WITHOUT Spark, and writes the expected outputs as
-generate-once parquet; the SQL oracles SELECT the pinned values.
+DuckDB cannot run the langid / perplexity / scrub / decode kernels
+(kernels/verdict.py::model_verdict), so those keys were rows-only
+checked.  This module runs the SAME pure-pandas reference oracle the
+F1 gate trusts (data_quality_check_spark/oracle.py::evaluate —
+bit-exact vs the pipeline per tests/test_pipeline_vs_oracle.py) over
+the deterministic corpora WITHOUT Spark, and writes the expected
+outputs as generate-once parquet; the SQL oracles SELECT the pinned
+values.
 That graduates `keep_decision_images`, `udf_decode`, `udf_langid`,
 `udf_perplexity`, `udf_scrub` and `agg_bucket_metrics` from rows-only
 to value-checked: what the pin verifies is the DISTRIBUTED execution
@@ -72,10 +73,7 @@ def ensure_label_fixtures(sf: float = 0.01,
     if all(os.path.exists(p) for p in paths.values()):
         return paths
 
-    from .kernels import codecs
-    from .kernels.langid import classify
-    from .kernels.ppl import perplexity
-    from .kernels.scrub import scrub_series
+    from .kernels.verdict import model_verdict
     from .oracle import evaluate
     from .sources.images import generate_pandas
 
@@ -111,63 +109,38 @@ def ensure_label_fixtures(sf: float = 0.01,
     })
     _write(paths["labels"], labels)
 
-    # decode metrics mirror functions/udfs.py::_decode_batch exactly
-    n = len(pdf)
-    ok = np.zeros(n, dtype=bool)
-    psnr = np.full(n, np.nan)
-    w_real = np.zeros(n, dtype=np.int32)
-    h_real = np.zeros(n, dtype=np.int32)
-    ph_real = np.zeros(n, dtype=np.int64)
-    for i in range(n):
-        b = pdf["bytes"].iloc[i]
-        if b is None:
-            continue
-        try:
-            pix = codecs.decode(b, pdf["fmt"].iloc[i],
-                                int(pdf["w"].iloc[i]),
-                                int(pdf["h"].iloc[i]))
-        except Exception:
-            continue
-        h_real[i], w_real[i] = pix.shape[0], pix.shape[1]
-        ph_real[i] = codecs.ahash64(pix)
-        phv = pdf["phash"].iloc[i]
-        ok[i] = (h_real[i] == int(pdf["h"].iloc[i])
-                 and w_real[i] == int(pdf["w"].iloc[i])
-                 and not pd.isna(phv) and ph_real[i] == int(phv))
-        if ok[i]:
-            try:
-                ref = codecs.decode_ref(b, pdf["fmt"].iloc[i],
-                                        w_real[i], h_real[i])
-                psnr[i] = (np.inf if ref is None
-                           else codecs.psnr_db(pix, ref))
-            except Exception:
-                pass
+    # decode metrics: the same model_verdict call pipeline_udf makes
+    dec = model_verdict(pdf["caption"], pdf["bytes"], pdf["fmt"], pdf["w"],
+                        pdf["h"], pdf["phash"])
     _write(paths["decode"], pd.DataFrame({
         "image_id": pdf["image_id"],
-        "pixel_ok": ok,
-        "w_real": w_real, "h_real": h_real, "phash_real": ph_real,
-        "psnr_db": np.array([_round2(v) for v in psnr], dtype=np.float64),
+        "pixel_ok": dec["pixel_ok"],
+        "w_real": dec["w_real"], "h_real": dec["h_real"],
+        "phash_real": dec["phash_real"],
+        "psnr_db": np.array([_round2(v) for v in dec["psnr_db"]],
+                            dtype=np.float64),
     }))
 
     # ---- documents: kernel outputs -----------------------------------
     docs = pq.read_table(
         os.path.join(testdata_dir, "documents.parquet")).to_pandas()
-    text = docs["text"]
-    lid = classify(text)
+    # text-only verdict, as udfs.text_verdict binds it: null image
+    # columns skip decode
+    none = pd.Series([None] * len(docs), dtype=object)
+    v = model_verdict(docs["text"], none, none, none, none, none)
     _write(paths["doc_langid"], pd.DataFrame({
         "doc_id": docs["doc_id"],
-        "lang": lid["lang"],
-        "lang_conf": [_round6(v) for v in lid["lang_conf"]],
+        "lang": v["lang"],
+        "lang_conf": [_round6(x) for x in v["lang_conf"]],
     }))
     _write(paths["doc_ppl"], pd.DataFrame({
         "doc_id": docs["doc_id"],
-        "ppl": [_round6(v) for v in perplexity(text)],
+        "ppl": [_round6(x) for x in v["ppl"]],
     }))
-    sc = scrub_series(text)
     _write(paths["doc_scrub"], pd.DataFrame({
         "doc_id": docs["doc_id"],
-        "scrubbed": sc["caption_scrubbed"],
-        "toxic": sc["toxic"].astype(bool),
+        "scrubbed": v["caption_scrubbed"],
+        "toxic": v["toxic"].astype(bool),
     }))
     return paths
 

@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from ..constants import N_BUCKETS, RULE_ORDER
-from ..operators.salt import detect_hot_buckets, salted_repartition
+from ..operators.salt import bucket_expr, detect_hot_buckets, salted_repartition
 from .catalog import Catalog
 from .pipeline import RESULT_COLUMNS, quality_frame
 
@@ -105,15 +105,15 @@ def run(spark: SparkSession, catalog: Catalog, images: DataFrame,
         # above the UDF node), so filtering the verdict made every
         # wave decode the FULL corpus — measured as 4 waves costing
         # 4x one wave's UDF time, and the 4-process disjoint-range
-        # mode SLOWER than 1 process.  Re-deriving pmod(phash) on the
+        # mode SLOWER than 1 process.  Re-deriving the bucket
+        # (salt.bucket_expr, the expression with_bucket projects) on the
         # raw scan columns lands the predicate in the scan; the
         # dup-rank window partitions by phash and phash determines
         # bucket, so per-wave frames are row-identical to the old
         # post-verdict filter.
         if len(wave) < n_buckets:
-            bexpr = (F.pmod(F.coalesce(F.col("phash"), F.lit(0)),
-                            F.lit(n_buckets)).cast("int"))
-            src = images.filter(bexpr.isin([int(b) for b in wave]))
+            src = images.filter(bucket_expr("phash", n_buckets)
+                                .isin([int(b) for b in wave]))
         else:
             src = images
         wave_df = quality_frame(src, n_buckets=n_buckets)

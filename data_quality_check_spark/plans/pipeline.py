@@ -5,9 +5,10 @@ Stage order is chosen around Spark's execution model:
 1. scan (columnar, schema-validated)        — O-1
 2. null guard flags + bucket assign          — O-6, O-29   [codegen]
 3. heuristic rule flags (Column exprs)       — O-7..O-9    [codegen]
-4. all four Arrow UDFs in ONE select         — O-10..O-13  [single
-   ArrowEvalPython pass; `bytes` is consumed here and dropped
-   immediately after, so the payload never crosses a shuffle]
+4. the one fused Arrow UDF                   — O-10..O-13  [single
+   ArrowEvalPython pass over kernels/verdict.py; `bytes` is consumed
+   here and dropped immediately after, so the payload never crosses a
+   shuffle]
 5. dup-rank window on phash                  — O-23        [shuffle 1,
    payload-free rows]
 6. keep decision (Column exprs)              — O-14        [codegen]
@@ -43,7 +44,7 @@ from ..constants import (
     LANG_UND,
 )
 from ..functions import rules as R
-from ..functions.udfs import pipeline_udf, text_udf
+from ..functions.udfs import pipeline_udf, text_verdict
 from ..operators.dedup import with_dup_rank
 from ..operators.keep import flag_col, with_keep
 from ..operators.salt import with_bucket
@@ -71,13 +72,10 @@ def enrich(images: DataFrame, n_buckets: int = N_BUCKETS,
                            ("image_id", "caption", "bytes", "w", "h", "phash")}),
     )
 
-    if with_decode:
-        # one fused ArrowEvalPython stage: text models + decode in a
-        # single Python worker per task
-        udf_cols = [pipeline_udf(
-            F.col("caption"), "bytes", "fmt", "w", "h", "phash").alias("txt")]
-    else:
-        udf_cols = [text_udf(F.col("caption")).alias("txt")]
+    # one fused ArrowEvalPython stage: text models + decode in a single
+    # Python worker per task
+    verdict = (pipeline_udf(F.col("caption"), "bytes", "fmt", "w", "h", "phash")
+               if with_decode else text_verdict(F.col("caption")))
 
     df = df.select(
         "image_id", "bucket", "phash", "fmt", "w", "h",
@@ -87,7 +85,7 @@ def enrich(images: DataFrame, n_buckets: int = N_BUCKETS,
         R.repetition_bad(toks).alias(flag_col(RULE_REPETITION)),
         R.stopword_bad(toks).alias(flag_col(RULE_STOPWORD)),
         R.symbol_bad(cap).alias(flag_col(RULE_SYMBOL)),
-        *udf_cols,
+        verdict.alias("txt"),
     )
 
     flat = [

@@ -32,6 +32,7 @@ from .constants import (
     STOPWORD_MIN_TOKENS,
     STOPWORDS,
 )
+from .functions.udfs import pipeline_udf, text_verdict
 from .operators import dedup, metrics, salt
 from .plans import pipeline
 from .sources import images as IM
@@ -338,35 +339,34 @@ FROM g
 
 
 # ---------------------------------------------------------------------------
-# C/D. UDF surface (rows-only: DuckDB cannot express the models)
+# C/D. UDF surface (DuckDB cannot run the models: the oracles SELECT the
+#      pandas-oracle fixtures of oracle_fixtures.py)
 # ---------------------------------------------------------------------------
 
+def _doc_verdict(spark, sf_dir):
+    return _t(spark, sf_dir, "documents").select(
+        "doc_id", text_verdict(F.col("text")).alias("v"))
+
+
 def q_udf_langid(spark, sf_dir):
-    from .functions.udfs import langid_udf
-    d = _t(spark, sf_dir, "documents")
-    out = d.select("doc_id", langid_udf(F.col("text")).alias("lid"))
-    return out.select("doc_id", F.col("lid.lang").alias("lang"),
-                      F.round("lid.lang_conf", 6).alias("lang_conf"))
+    return _doc_verdict(spark, sf_dir).select(
+        "doc_id", "v.lang", F.round("v.lang_conf", 6).alias("lang_conf"))
 
 
 def q_udf_perplexity(spark, sf_dir):
-    from .functions.udfs import ppl_udf
-    d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", F.round(ppl_udf(F.col("text")), 6).alias("ppl"))
+    return _doc_verdict(spark, sf_dir).select(
+        "doc_id", F.round("v.ppl", 6).alias("ppl"))
 
 
 def q_udf_scrub(spark, sf_dir):
-    from .functions.udfs import scrub_udf
-    d = _t(spark, sf_dir, "documents")
-    out = d.select("doc_id", scrub_udf(F.col("text")).alias("s"))
-    return out.select("doc_id", F.col("s.caption_scrubbed").alias("scrubbed"),
-                      F.col("s.toxic").alias("toxic"))
+    return _doc_verdict(spark, sf_dir).select(
+        "doc_id", F.col("v.caption_scrubbed").alias("scrubbed"), "v.toxic")
 
 
 def q_udf_decode(spark, sf_dir):
-    from .functions.udfs import decode_udf
     im = _images(spark, sf_dir)
-    out = im.select("image_id", decode_udf("bytes", "fmt", "w", "h", "phash").alias("d"))
+    out = im.select("image_id", pipeline_udf(
+        "caption", "bytes", "fmt", "w", "h", "phash").alias("d"))
     return out.select("image_id", "d.pixel_ok", "d.w_real", "d.h_real",
                       "d.phash_real",
                       F.round("d.psnr_db", 2).alias("psnr_db"))
@@ -4309,12 +4309,11 @@ def q_classifier_distill(spark, sf_dir):
     oracle takes teacher labels from the pandas-oracle labels fixture
     (identical to the UDF by the shared-kernel invariant) and
     replicates the NB arithmetic in SQL."""
-    from .functions.udfs import langid_udf
     from .operators.classify import nb_langid
 
     im = _images(spark, sf_dir).select(
         "image_id", "caption",
-        langid_udf(F.col("caption")).alias("__lid"))
+        text_verdict(F.col("caption")).alias("__lid"))
     # the NB plan references the labeled frame from 5 branches (train
     # counts, priors, denominators, per-doc counts, final join) —
     # materialize the EXPENSIVE teacher UDF once instead of re-running

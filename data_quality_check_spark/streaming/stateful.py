@@ -64,7 +64,14 @@ def streaming_dedup(stream: DataFrame, ttl_ms: int | None = None) -> DataFrame:
     arrival of each phash wins across all micro-batches.  `ttl_ms`
     bounds state size: keys idle longer than the TTL are evicted
     (processing-time timeout), so state holds only the active-window
-    working set instead of every phash ever seen."""
+    working set instead of every phash ever seen.
+
+    A processing-time timeout makes Spark run a no-data batch after
+    every batch, so with `ttl_ms` an availableNow query never
+    terminates (nor returns from processAllAvailable).  Run it under a
+    processingTime trigger, or set
+    spark.sql.streaming.noDataMicroBatches.enabled=false before start:
+    timeouts then fire on the next data batch."""
     timeout = (GroupStateTimeout.ProcessingTimeTimeout
                if ttl_ms is not None else GroupStateTimeout.NoTimeout)
     return (

@@ -198,7 +198,8 @@ def test_streaming_audio_quality_matches_batch(spark, tmp_path):
         spark, shard_dir, AU.AUDIO_DDL, cat,
         checkpoint_dir=str(tmp_path / "ckpt"),
         max_files_per_trigger=1).start()
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
+    assert q.exception() is None
 
     rep = cat.read_table("audio_quality_reports").toPandas()
     assert len(rep) == 2 and set(rep.batch_id) == {0, 1}

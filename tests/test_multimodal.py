@@ -55,10 +55,14 @@ def test_stubs_raise():
 def test_null_phash_flags_row_not_task(spark):
     """ADVICE r1: a row with decodable bytes but NULL phash (or null
     dims) must come back pixel_ok=False — not abort the whole Arrow
-    task with int(NaN).  Exercised through decode_udf AND the oracle."""
+    task with int(NaN).  Exercised through pipeline_udf AND the oracle;
+    a null-bytes row bound through text_verdict skips decode and still
+    gets model_verdict's text fields."""
     import pandas as pd
 
-    from data_quality_check_spark.functions.udfs import decode_udf
+    from data_quality_check_spark.functions.udfs import (
+        pipeline_udf, text_verdict)
+    from data_quality_check_spark.kernels.verdict import model_verdict
     from pyspark.sql import functions as F
     from tests.oracle import evaluate
 
@@ -72,7 +76,8 @@ def test_null_phash_flags_row_not_task(spark):
     ]
     sdf = spark.createDataFrame(rows, IM.IMAGES_DDL)
     out = (sdf.select("image_id",
-                      decode_udf("bytes", "fmt", "w", "h", "phash").alias("d"))
+                      pipeline_udf("caption", "bytes", "fmt", "w", "h",
+                                   "phash").alias("d"))
            .select("image_id", "d.pixel_ok").toPandas()
            .set_index("image_id")["pixel_ok"])
     assert bool(out["ok"]) is True
@@ -85,6 +90,18 @@ def test_null_phash_flags_row_not_task(spark):
     assert bool(lab.loc["ok", "pixel_ok"]) is True
     assert bool(lab.loc["null_ph", "pixel_ok"]) is False
     assert bool(lab.loc["null_dims", "pixel_ok"]) is False
+
+    cap = "the photo of a dog, mail bob@example.com"
+    got = (spark.createDataFrame([(cap,)], "caption string")
+           .select(text_verdict(F.col("caption")).alias("d"))
+           .select("d.*").toPandas().iloc[0])
+    none = pd.Series([None], dtype=object)
+    ref = model_verdict(pd.Series([cap]), none, none, none, none,
+                        none).iloc[0]
+    assert bool(got["pixel_ok"]) is False
+    assert got["caption_scrubbed"] != cap  # the scrub did fire
+    for c in ("lang", "ppl", "caption_scrubbed"):
+        assert got[c] == ref[c], c
 
 
 def test_resize_nearest_kernel():

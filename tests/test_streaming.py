@@ -37,7 +37,8 @@ def test_stream_matches_batch(spark, shard_dir, oracle_labels):
             spark, in_dir, out_root,
             checkpoint_dir=os.path.join(out_root, "ckpt"),
             max_files_per_trigger=1)
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
+        assert q.exception() is None
 
         res = spark.read.parquet(f"{out_root}/stream_results")
         assert res.count() == 1000
@@ -80,7 +81,8 @@ def test_streaming_dq_reports_per_batch(spark, shard_dir):
             spark, shard_dir, IM.IMAGES_DDL, suite, cat,
             checkpoint_dir=os.path.join(out_root, "ckpt"),
             max_files_per_trigger=1).start()
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
+        assert q.exception() is None
 
         rep = cat.read_table("dq_stream_reports").toPandas()
         # 2 micro-batches x 3 checks
@@ -122,7 +124,8 @@ def test_streaming_visual_quality_reports(spark, shard_dir):
             spark, shard_dir, IM.IMAGES_DDL, cat,
             checkpoint_dir=os.path.join(out_root, "ckpt"),
             max_files_per_trigger=1).start()
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
+        assert q.exception() is None
 
         rep = cat.read_table("visual_quality_reports").toPandas()
         assert len(rep) == 2 and set(rep.batch_id) == {0, 1}
@@ -163,7 +166,8 @@ def test_stream_static_enrichment(spark, shard_dir):
              .option("path", f"{out_dir}/out")
              .option("checkpointLocation", f"{out_dir}/ckpt")
              .trigger(availableNow=True).start())
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
+        assert q.exception() is None
         rows = {(r.k, r.v): r.name
                 for r in spark.read.parquet(f"{out_dir}/out").collect()}
         assert rows == {(0, 0): "a", (1, 1): "b", (2, 2): "c",
@@ -215,7 +219,8 @@ def test_stream_stream_interval_join(spark, shard_dir):
              .option("path", f"{out_dir}/out")
              .option("checkpointLocation", f"{out_dir}/ckpt")
              .trigger(availableNow=True).start())
-        q.awaitTermination(180)
+        assert q.awaitTermination(180)
+        assert q.exception() is None
         got = {(r.pid, r.cid)
                for r in spark.read.parquet(f"{out_dir}/out").collect()}
         # pid 100 (12:20): clicks at 12:15 ok, 12:25 is in the future
@@ -245,7 +250,8 @@ def test_stream_restart_resumes_exactly_once(spark, shard_dir):
             q = start_quality_stream(spark, shard_dir, out_root,
                                      checkpoint_dir=ckpt,
                                      max_files_per_trigger=1)
-            q.awaitTermination(120)
+            assert q.awaitTermination(120)
+            assert q.exception() is None
             res = spark.read.parquet(f"{out_root}/stream_results")
             n = res.count()
             assert n == 500 * (i + 1), f"run {i}: {n} rows"
@@ -287,7 +293,8 @@ def test_streaming_drift_monitor(spark, shard_dir):
             baseline, "value", cat,
             checkpoint_dir=os.path.join(out_root, "ckpt"),
             max_files_per_trigger=1).start()
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
+        assert q.exception() is None
         rows = {r["batch_id"]: r for r in
                 cat.read_table("drift_reports").collect()}
         psis = sorted(r["psi"] for r in rows.values())
@@ -324,7 +331,8 @@ def test_streaming_visual_risk_reports(spark, shard_dir):
             spark, shard_dir, IM.IMAGES_DDL, cat,
             checkpoint_dir=os.path.join(out_root, "ckpt"),
             max_files_per_trigger=1).start()
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
+        assert q.exception() is None
 
         rep = cat.read_table("visual_risk_reports").toPandas()
         assert len(rep) == 2 and set(rep.batch_id) == {0, 1}
@@ -373,7 +381,8 @@ def test_streaming_decontamination_matches_batch(spark, shard_dir):
             spark, shard_dir, IM.IMAGES_DDL, ev, cat,
             checkpoint_dir=os.path.join(out_root, "ckpt"),
             max_files_per_trigger=1).start()
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
+        assert q.exception() is None
 
         got = cat.read_table("decontamination_verdicts").toPandas()
         assert len(got) == len(tr_pdf)
@@ -427,7 +436,8 @@ def test_streaming_decontamination_dihedral_gate(spark, shard_dir):
             checkpoint_dir=os.path.join(out_root, "ckpt"),
             max_hamming=2, max_files_per_trigger=1,
             dihedral=True).start()
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
+        assert q.exception() is None
 
         got = cat.read_table("decontamination_verdicts").toPandas()
         assert len(got) == len(tr_pdf)
@@ -473,7 +483,8 @@ def test_streaming_semantic_contamination_reaggregates(spark, shard_dir):
             spark, shard_dir, ddl, ev, cat,
             checkpoint_dir=os.path.join(out_root, "ckpt"),
             threshold=0.38, max_files_per_trigger=1).start()
-        q.awaitTermination(120)
+        assert q.awaitTermination(120)
+        assert q.exception() is None
 
         got = cat.read_table("semantic_contamination").toPandas()
         assert set(got.batch_id) == {0, 1}

@@ -58,7 +58,8 @@ def test_stream_equals_sequential_batches(spark, dirs):
         spark, ind, "doc_id long, text string", cat,
         checkpoint_dir=os.path.join(outd, "ckpt"),
         max_files_per_trigger=1).start()
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
+    assert q.exception() is None
 
     got_keepers = sorted(r.doc_id for r in
                          cat.read_table("corpus_keepers").collect())
@@ -100,12 +101,14 @@ def test_stream_restart_is_idempotent(spark, dirs):
     args = (spark, ind, "doc_id long, text string", cat)
     q = start_incremental_dedup_stream(
         *args, checkpoint_dir=ckpt, max_files_per_trigger=1).start()
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
+    assert q.exception() is None
     n_keep = cat.read_table("corpus_keepers").count()
     n_stat = cat.read_table("dedup_stream_status").count()
 
     q2 = start_incremental_dedup_stream(
         *args, checkpoint_dir=ckpt, max_files_per_trigger=1).start()
-    q2.awaitTermination(60)
+    assert q2.awaitTermination(60)
+    assert q2.exception() is None
     assert cat.read_table("corpus_keepers").count() == n_keep
     assert cat.read_table("dedup_stream_status").count() == n_stat

@@ -45,7 +45,8 @@ def test_cross_batch_dedup(spark, dirs):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
+    assert q.exception() is None
 
     res = spark.read.parquet(os.path.join(outd, "res")).toPandas()
     assert len(res) == 1000
@@ -96,7 +97,8 @@ def test_cross_batch_near_dup_candidates(spark, dirs):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(180)
+    assert q.awaitTermination(180)
+    assert q.exception() is None
 
     res = spark.read.parquet(os.path.join(outd, "res")).toPandas()
     assert len(res) == 16  # 4 docs x 4 bands
@@ -132,17 +134,31 @@ def test_streaming_dedup_with_ttl_matches_no_timeout(spark, tmp_path):
         pq.write_table(tbl, os.path.join(in_dir, f"s{i}.parquet"))
 
     outs = {}
-    for tag, ttl in (("none", None), ("long", 3_600_000)):
-        stream = (spark.readStream.schema(IM.IMAGES_DDL)
-                  .option("maxFilesPerTrigger", 1).parquet(in_dir))
-        out_dir = str(tmp_path / f"out_{tag}")
-        q = (streaming_dedup(stream, ttl_ms=ttl).writeStream
-             .format("parquet").option("path", out_dir)
-             .option("checkpointLocation", str(tmp_path / f"ck_{tag}"))
-             .trigger(availableNow=True).start())
-        q.awaitTermination(120)
-        outs[tag] = (spark.read.parquet(out_dir).toPandas()
-                     .sort_values("image_id").reset_index(drop=True))
+    # a processing-time timeout makes Spark run a no-data batch after
+    # every batch, so an availableNow query would never terminate
+    # (see streaming_dedup); without no-data batches it ends after
+    # its data batches and the TTL (1 h) still never fires
+    no_data = "spark.sql.streaming.noDataMicroBatches.enabled"
+    prev = spark.conf.get(no_data, None)
+    spark.conf.set(no_data, "false")
+    try:
+        for tag, ttl in (("none", None), ("long", 3_600_000)):
+            stream = (spark.readStream.schema(IM.IMAGES_DDL)
+                      .option("maxFilesPerTrigger", 1).parquet(in_dir))
+            out_dir = str(tmp_path / f"out_{tag}")
+            q = (streaming_dedup(stream, ttl_ms=ttl).writeStream
+                 .format("parquet").option("path", out_dir)
+                 .option("checkpointLocation", str(tmp_path / f"ck_{tag}"))
+                 .trigger(availableNow=True).start())
+            assert q.awaitTermination(120)
+            assert q.exception() is None
+            outs[tag] = (spark.read.parquet(out_dir).toPandas()
+                         .sort_values("image_id").reset_index(drop=True))
+    finally:
+        if prev is None:
+            spark.conf.unset(no_data)
+        else:
+            spark.conf.set(no_data, prev)
     pd.testing.assert_frame_equal(outs["none"], outs["long"])
     assert outs["none"].is_dup.sum() > 0  # cross-batch dups exist
 

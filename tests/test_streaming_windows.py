@@ -54,7 +54,8 @@ def test_session_stream_matches_batch(spark, ts_shard_dir):
     q = (out.writeStream.format("memory").queryName("sess")
          .outputMode("complete")
          .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
+    assert q.exception() is None
 
     got = spark.sql("select * from sess").toPandas()
     batch = (spark.read.parquet(ts_shard_dir)
@@ -85,7 +86,8 @@ def test_dedup_within_watermark_suppresses(spark, ts_shard_dir):
     q = (out.writeStream.format("memory").queryName("dedup")
          .outputMode("append")
          .trigger(availableNow=True).start())
-    q.awaitTermination(120)
+    assert q.awaitTermination(120)
+    assert q.exception() is None
 
     got = spark.sql("select phash, count(*) n from dedup group by 1"
                     ).toPandas()
