@@ -4,9 +4,9 @@ check -> ahash64 compare -> reference-decode PSNR).
 
 functions/udfs.py::pipeline_udf yields it per Arrow batch, the pandas
 oracle calls it on the whole frame and oracle_fixtures builds the
-decode fixture from it, so the three cannot drift.  Each row's output
-depends on that row alone (the text kernels sum with bincount), so
-batch boundaries never change a value.
+decode fixture from the oracle's output, so the three cannot drift.
+Each row's output depends on that row alone (the text kernels sum
+with bincount), so batch boundaries never change a value.
 """
 
 from __future__ import annotations

@@ -357,90 +357,6 @@ def _local_components(edges: DataFrame) -> DataFrame:
 _LOCAL_CC_EDGES = 4_000_000
 
 
-def connected_components(pairs: DataFrame, src: str = "id_a",
-                         dst: str = "id_b", max_iter: int = 30,
-                         local_threshold: int = _LOCAL_CC_EDGES,
-                         ) -> DataFrame:
-    """Resolve near-dup PAIRS into duplicate CLUSTERS: connected
-    components by iterative min-label propagation, the step that turns
-    pairwise similarity output into "keep one canonical doc per
-    group".  Returns (node, component) with component = min node id
-    reachable from `node`.
-
-    Execution model: a driver-side loop of join + groupBy rounds —
-    the standard Pregel-style iteration expressed as DataFrames.  Each
-    round is localCheckpoint()ed to cut the lineage (otherwise plan
-    depth grows linearly and re-executes prior rounds); the loop exits
-    when a round changes no label, after at most graph-diameter
-    rounds.  At 10^12 edges the same loop runs with edges/labels
-    co-partitioned on the join key; large-star/small-star alternation
-    (Kiveris et al.) would cut round count to O(log d) if diameter
-    ever becomes the bottleneck.
-
-    Round latency: the per-round checkpoint is LAZY (eager=False), so
-    the convergence count is the job that materializes it — one Spark
-    job per round instead of two (checkpoint job + count job).  On
-    small per-round data the fixed job/stage latency IS the round
-    cost, so this halves it; at scale it is free either way.
-    """
-    e = pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-    edges = e.union(
-        e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    # materialize the edge list ONCE: `pairs` is typically an
-    # expensive similarity join, and the loop below would otherwise
-    # recompute it on every round
-    edges = edges.localCheckpoint()
-    # local finish: when the whole (symmetric) edge list fits one
-    # task, a single union-find job replaces diameter-many
-    # fixed-latency propagation rounds (see _local_components)
-    if edges.count() <= local_threshold:
-        return (_local_components(
-            edges.select(F.col("src").alias("u"),
-                         F.col("dst").alias("v")))
-            .select("node", "component"))
-    # initialize labels at the CLOSED-NEIGHBORHOOD min — one groupBy,
-    # strictly cheaper than a loop round (no labels join, no
-    # convergence count) and it IS the first propagation round, so
-    # clique-shaped dup clusters (the common case: verified near-dup
-    # groups are near-complete graphs) converge one full
-    # join+checkpoint+count round earlier.  Correctness unchanged:
-    # labels start >= component min and every fixed point of min
-    # propagation is the component min.
-    labels = (edges.groupBy("src")
-              .agg(F.min("dst").alias("__m"))
-              .select(F.col("src").alias("node"),
-                      F.least(F.col("src"), F.col("__m")).alias("label")))
-    for _ in range(max_iter):
-        nbr_min = (edges.join(labels, edges["dst"] == labels["node"])
-                   .groupBy("src").agg(F.min("label").alias("nbr_min")))
-        # fold the convergence flag into the label update: counting
-        # it is then a shuffle-free scan of the checkpointed frame,
-        # instead of an extra labels-vs-labels join per round
-        new_labels = (
-            labels.join(nbr_min, labels["node"] == nbr_min["src"], "left")
-            .select(labels["node"],
-                    F.least(labels["label"],
-                            F.coalesce(nbr_min["nbr_min"], labels["label"])
-                            ).alias("label"),
-                    (F.coalesce(nbr_min["nbr_min"], labels["label"])
-                     < labels["label"]).alias("__chg"))
-            .localCheckpoint(eager=False)
-        )
-        changed = new_labels.filter(F.col("__chg")).count()
-        labels = new_labels.drop("__chg")
-        if changed == 0:
-            break
-    else:
-        # silent truncation would return WRONG labels on a graph with
-        # diameter > max_iter; fail honestly (or use
-        # connected_components_star, which needs O(log n) rounds)
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iter} "
-            f"rounds (graph diameter too large); use "
-            f"connected_components_star for high-diameter graphs")
-    return labels.select("node", F.col("label").alias("component"))
-
-
 def _contract_min(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
     """One hash-to-min contraction round over VERIFIED edges: map
     every node to the minimum of its closed neighborhood and rewrite
@@ -486,15 +402,20 @@ def _contract_min(edges: DataFrame) -> tuple[DataFrame, DataFrame]:
 def connected_components_star(pairs: DataFrame, src: str = "id_a",
                               dst: str = "id_b",
                               max_iter: int = 50,
-                              pre_contract: bool = True,
                               local_threshold: int = _LOCAL_CC_EDGES,
                               ) -> DataFrame:
-    """Connected components by alternating large-star / small-star
-    rounds (Kiveris et al., "Connected Components in MapReduce and
-    Beyond", SoCC'14 — public algorithm): converges in O(log n)
-    rounds regardless of graph DIAMETER, where min-label propagation
-    (`connected_components`) needs diameter rounds.  Same output
-    contract: (node, component), component = min reachable node.
+    """Resolve near-dup PAIRS into duplicate CLUSTERS — the package's
+    one connected-components algorithm, the step that turns pairwise
+    similarity output into "keep one canonical doc per group".
+    Returns (node, component) with component = min node id reachable
+    from `node`, for every node of a pair (self-loops included).
+
+    Alternating large-star / small-star rounds (Kiveris et al.,
+    "Connected Components in MapReduce and Beyond", SoCC'14 — public
+    algorithm) converge in O(log n) rounds regardless of graph
+    DIAMETER, after one min-contraction pre-round (_contract_min);
+    a graph that has not converged in `max_iter` rounds raises
+    instead of returning partial labels.
 
       large-star: every node links its strictly-larger neighbors to
           the minimum of its closed neighborhood;
@@ -502,11 +423,12 @@ def connected_components_star(pairs: DataFrame, src: str = "id_a",
           itself) to that minimum.
 
     Both steps are one groupBy(min) + one join over the current edge
-    multiset — the same shuffle class per round as label propagation,
-    but exponentially fewer rounds on path-ish graphs.  Convergence =
-    the edge set reaches a fixed point (stars only), checked with an
-    order-insensitive xxhash64 fingerprint — no edge-set comparison
-    join.
+    multiset — the same shuffle class per round as min-label
+    propagation, but exponentially fewer rounds on path-ish graphs.
+    Each round is lazily localCheckpoint()ed to cut the lineage.
+    Convergence = the edge set reaches a fixed point (stars only),
+    checked with an order-insensitive xxhash64 fingerprint — no
+    edge-set comparison join.
 
     Multi-level finish: the fingerprint already carries the live
     edge COUNT, so whenever the survivor graph (after the
@@ -542,9 +464,7 @@ def connected_components_star(pairs: DataFrame, src: str = "id_a",
         return (nodes.join(comp, "node", "left")
                 .select("node", F.coalesce("component", "node")
                         .alias("component")))
-    mapping = None
-    if pre_contract:
-        edges, mapping = _contract_min(edges)
+    edges, mapping = _contract_min(edges)
 
     def _fingerprint(ed: DataFrame):
         a, b = F.least("u", "v"), F.greatest("u", "v")
@@ -612,14 +532,13 @@ def connected_components_star(pairs: DataFrame, src: str = "id_a",
         # fixed point: edges are (node -> component-min) stars
         comp = edges.select(F.col("u").alias("node"),
                             F.col("v").alias("component"))
-    if mapping is not None:
-        # compose: original node -> its contraction label -> the
-        # label's component (the label IS the component when its
-        # whole component collapsed to one node and left no edges)
-        comp = (mapping.join(comp.withColumnRenamed("node", "lbl"),
-                             "lbl", "left")
-                .select("node",
-                        F.coalesce("component", "lbl").alias("component")))
+    # compose: original node -> its contraction label -> the label's
+    # component (the label IS the component when its whole component
+    # collapsed to one node and left no edges)
+    comp = (mapping.join(comp.withColumnRenamed("node", "lbl"),
+                         "lbl", "left")
+            .select("node",
+                    F.coalesce("component", "lbl").alias("component")))
     return (nodes.join(comp, "node", "left")
             .select("node", F.coalesce("component", "node")
                     .alias("component")))
@@ -727,7 +646,7 @@ def text_near_dup_keepers(df: DataFrame, text_col: str, id_col: str,
     verified = (pairs.withColumn("jaccard", inter / union)
                 .filter(F.col("jaccard") >= threshold)
                 .select("id_a", "id_b"))
-    comp = connected_components(verified)
+    comp = connected_components_star(verified)
     return (
         df.select(F.col(id_col).alias("id"))
         .join(comp, F.col("id") == F.col("node"), "left")
@@ -1327,7 +1246,7 @@ def keepers_by_score(df: DataFrame, pairs: DataFrame, id_col: str,
     keep themselves.  Cost: the components rounds plus ONE window
     shuffle on the component key — the same class as the dup-rank
     window the pipeline already pays."""
-    comp = connected_components(pairs)
+    comp = connected_components_star(pairs)
     scored = df.select(F.col(id_col).alias("id"),
                        F.col(score_col).alias("__s"))
     labeled = (scored.join(comp, scored.id == comp.node, "left")

@@ -111,4 +111,7 @@ def evaluate(pdf: pd.DataFrame) -> pd.DataFrame:
         "scrub_hits": v["scrub_hits"],
         "pixel_ok": pixel_ok,
         "psnr_db": psnr,
+        "w_real": v["w_real"],
+        "h_real": v["h_real"],
+        "phash_real": v["phash_real"],
     })

@@ -109,15 +109,14 @@ def ensure_label_fixtures(sf: float = 0.01,
     })
     _write(paths["labels"], labels)
 
-    # decode metrics: the same model_verdict call pipeline_udf makes
-    dec = model_verdict(pdf["caption"], pdf["bytes"], pdf["fmt"], pdf["w"],
-                        pdf["h"], pdf["phash"])
+    # decode metrics: evaluate's own model_verdict call, the one
+    # pipeline_udf makes
     _write(paths["decode"], pd.DataFrame({
-        "image_id": pdf["image_id"],
-        "pixel_ok": dec["pixel_ok"],
-        "w_real": dec["w_real"], "h_real": dec["h_real"],
-        "phash_real": dec["phash_real"],
-        "psnr_db": np.array([_round2(v) for v in dec["psnr_db"]],
+        "image_id": lab["image_id"],
+        "pixel_ok": lab["pixel_ok"],
+        "w_real": lab["w_real"], "h_real": lab["h_real"],
+        "phash_real": lab["phash_real"],
+        "psnr_db": np.array([_round2(v) for v in lab["psnr_db"]],
                             dtype=np.float64),
     }))
 

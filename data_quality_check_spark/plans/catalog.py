@@ -43,8 +43,8 @@ class Catalog:
         append-mode FileOutputCommitter shares one `_temporary/0`
         staging dir across applications, so two processes appending
         the same directory can delete each other's pending task
-        files — the multi-process pipeline runs in
-        tools/bench_multiproc.py hit exactly that)."""
+        files — concurrent multi-process pipeline runs over disjoint
+        bucket ranges hit exactly that)."""
         self.append(name, spark.createDataFrame(rows, schema))
 
 

@@ -1982,13 +1982,14 @@ FROM q
 
 def q_dedup_components(spark, sf_dir):
     """Near-dup pair resolution: connected components over the
-    embedding near-dup graph (iterative min-label propagation) —
-    SQL-checked against a DuckDB recursive CTE computing min
-    reachable id."""
+    embedding near-dup graph (alternating large-star/small-star
+    rounds, O(log n), diameter-independent) — SQL-checked against a
+    DuckDB recursive CTE computing min reachable id.  Registered as
+    both `dedup_components` and `dedup_components_star`."""
     from .operators.similarity import embedding_near_dups
     em = _t(spark, sf_dir, "embeddings")
     pairs = embedding_near_dups(em, threshold=0.25, exact=True)
-    return dedup.connected_components(pairs)
+    return dedup.connected_components_star(pairs)
 
 
 SQL_DEDUP_COMPONENTS = """
@@ -2016,17 +2017,6 @@ WITH RECURSIVE scored AS (
 )
 SELECT node, min(r) AS component FROM reach GROUP BY node
 """
-
-
-def q_dedup_components_star(spark, sf_dir):
-    """Same cluster resolution as dedup_components but via the
-    alternating large-star/small-star algorithm (O(log n) rounds,
-    diameter-independent) — checked against the identical DuckDB
-    recursive-CTE oracle."""
-    from .operators.similarity import embedding_near_dups
-    em = _t(spark, sf_dir, "embeddings")
-    pairs = embedding_near_dups(em, threshold=0.25, exact=True)
-    return dedup.connected_components_star(pairs)
 
 
 def q_dedup_embedding_lsh(spark, sf_dir):
@@ -6503,7 +6493,7 @@ _ALL_QUERIES: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | No
     "dedup_embedding_lsh": (q_dedup_embedding_lsh, SQL_DEDUP_EMBEDDING_LSH),
     "dedup_components": (q_dedup_components, SQL_DEDUP_COMPONENTS),
     "embed_quantize_int8": (q_embed_quantize_int8, SQL_EMBED_QUANTIZE_INT8),
-    "dedup_components_star": (q_dedup_components_star, SQL_DEDUP_COMPONENTS),
+    "dedup_components_star": (q_dedup_components, SQL_DEDUP_COMPONENTS),
     "dedup_text_pipeline": (q_dedup_text_pipeline, SQL_DEDUP_TEXT_PIPELINE),
     "text_tokens": (q_text_tokens, SQL_TEXT_TOKENS),
     "text_quality_score": (q_text_quality_score, SQL_TEXT_QUALITY_SCORE),

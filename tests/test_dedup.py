@@ -12,6 +12,31 @@ BASE = ("a photo of the old stone bridge over the quiet river at "
         "sunset with a small boat passing underneath the arches")
 
 
+def _uf_components(pairs) -> dict:
+    """Pure-Python union-find reference: {node: min reachable node}
+    over every endpoint of `pairs` (self-loops included)."""
+    parent: dict = {}
+
+    def find(x):
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        parent.setdefault(a, a)
+        parent.setdefault(b, b)
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _star(df, **kw) -> set:
+    return {(r.node, r.component)
+            for r in dedup.connected_components_star(df, **kw).collect()}
+
+
 def _docs(spark):
     rows = [
         (1, BASE),
@@ -94,14 +119,14 @@ def test_ngram_jaccard_pair_detection(spark):
 
 
 def test_connected_components_basic(spark):
-    """Two components + a long chain (forces multiple propagation
-    rounds: label 1 travels diameter-many hops)."""
+    """Two components + a long chain (label 20 travels diameter-many
+    hops)."""
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (10, 11),
          (20, 21), (21, 22), (22, 23), (23, 24), (24, 25)],
         "id_a long, id_b long")
     got = {r["node"]: r["component"]
-           for r in dedup.connected_components(pairs).collect()}
+           for r in dedup.connected_components_star(pairs).collect()}
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10,
                    20: 20, 21: 20, 22: 20, 23: 20, 24: 20, 25: 20}
 
@@ -112,7 +137,7 @@ def test_connected_components_on_near_dup_pairs(spark):
     d = _docs(spark)
     pairs = dedup.jaccard_pairs_exact(d, "text", "doc_id", threshold=0.3)
     got = {r["node"]: r["component"]
-           for r in dedup.connected_components(pairs).collect()}
+           for r in dedup.connected_components_star(pairs).collect()}
     assert got[1] == got[7] == got[3] == 1
     assert 4 not in got and 5 not in got  # no qualifying pair
 
@@ -120,8 +145,8 @@ def test_connected_components_on_near_dup_pairs(spark):
 def test_text_pipeline_matches_exact(spark):
     """The composed MinHash->Jaccard->components pipeline must agree
     with the brute-force ground truth (exact all-pairs Jaccard ->
-    components) on the fixture docs — LSH candidates may only ADD
-    misses, and here there are none."""
+    union-find components) on the fixture docs — LSH candidates may
+    only ADD misses, and here there are none."""
     d = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
     got = {r["id"]: (r["keeper_id"], r["is_dup"])
            for r in dedup.text_near_dup_keepers(
@@ -129,8 +154,8 @@ def test_text_pipeline_matches_exact(spark):
 
     exact_pairs = dedup.jaccard_pairs_exact(d, "text", "doc_id",
                                             threshold=0.5)
-    comp = {r["node"]: r["component"]
-            for r in dedup.connected_components(exact_pairs).collect()}
+    comp = _uf_components((r["id_a"], r["id_b"])
+                          for r in exact_pairs.collect())
     ids = [r["doc_id"] for r in d.select("doc_id").collect()]
     want = {i: (comp.get(i, i), comp.get(i, i) != i) for i in ids}
     assert got == want
@@ -166,58 +191,43 @@ def test_minhash_short_text_densification(spark):
 
 def test_star_components_high_diameter(spark):
     """Large-star/small-star resolves a 100-edge PATH (diameter 100)
-    in O(log n) rounds; min-label propagation needs diameter rounds
-    and now fails HONESTLY when max_iter is too small instead of
-    returning partially-propagated labels."""
+    in O(log n) rounds, and fails HONESTLY when max_iter is too small
+    instead of returning partially-propagated labels."""
     import pytest
-
-    from data_quality_check_spark.operators.dedup import (
-        connected_components, connected_components_star)
 
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(100)], "id_a long, id_b long")
     # local_threshold=0 forces the DISTRIBUTED rounds (the default
     # would hand a 100-edge graph straight to the local finish)
-    got = {(r.node, r.component)
-           for r in connected_components_star(
-               path, local_threshold=0).collect()}
-    assert got == {(i, 0) for i in range(101)}
+    assert _star(path, local_threshold=0) == {(i, 0) for i in range(101)}
 
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(path, max_iter=5,
-                             local_threshold=0).collect()
+        dedup.connected_components_star(path, max_iter=1,
+                                        local_threshold=0).collect()
 
 
 def test_star_components_matches_minlabel(spark):
+    """Star components, forced-distributed and default, equal the
+    union-find reference's min-label components on a random graph."""
     import random
-
-    from data_quality_check_spark.operators.dedup import (
-        connected_components, connected_components_star)
 
     random.seed(7)
     pairs = [(random.randrange(200), random.randrange(200))
              for _ in range(150)] + [(5, 5)]  # incl. self-loop node
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    # force the distributed rounds on both: the star/minlabel
-    # equivalence is what this test pins
-    a = {(r.node, r.component)
-         for r in connected_components_star(
-             df, local_threshold=0).collect()}
-    b = {(r.node, r.component)
-         for r in connected_components(
-             df, max_iter=300, local_threshold=0).collect()}
-    assert a == b
+    want = set(_uf_components(pairs).items())
+    # local_threshold=0 forces the distributed rounds
+    assert _star(df, local_threshold=0) == want
+    assert _star(df) == want
 
 
 def test_local_uf_finish_matches_distributed(spark):
     """The single-task union-find local finish (default path for
     small survivor graphs) must agree with the forced-distributed
-    rounds on every graph shape: random, path (high diameter),
-    cliques, self-loops, and string-typed ids."""
+    rounds and the union-find reference on every graph shape:
+    random, path (high diameter), cliques, self-loops, and
+    string-typed ids."""
     import random
-
-    from data_quality_check_spark.operators.dedup import (
-        connected_components, connected_components_star)
 
     random.seed(13)
     pairs = ([(random.randrange(300), random.randrange(300))
@@ -225,42 +235,27 @@ def test_local_uf_finish_matches_distributed(spark):
              + [(i, i + 1) for i in range(500, 560)]   # long path
              + [(900, 900)])                            # self-loop
     df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    want = {(r.node, r.component)
-            for r in connected_components_star(
-                df, local_threshold=0).collect()}
-    got_star = {(r.node, r.component)
-                for r in connected_components_star(df).collect()}
-    got_prop = {(r.node, r.component)
-                for r in connected_components(df).collect()}
-    assert got_star == want
-    assert got_prop == want
+    want = set(_uf_components(pairs).items())
+    assert _star(df, local_threshold=0) == want
+    assert _star(df) == want
 
     # string ids: union-by-min must match Spark's UTF8 min ordering
     sp = spark.createDataFrame(
         [("img_b", "img_a"), ("img_c", "img_b"), ("img_z", "img_z")],
         "id_a string, id_b string")
-    got_s = {(r.node, r.component)
-             for r in connected_components_star(sp).collect()}
-    assert got_s == {("img_a", "img_a"), ("img_b", "img_a"),
-                     ("img_c", "img_a"), ("img_z", "img_z")}
+    assert _star(sp) == {("img_a", "img_a"), ("img_b", "img_a"),
+                         ("img_c", "img_a"), ("img_z", "img_z")}
 
 
 def test_local_uf_mid_loop_handoff(spark):
     """A threshold between the initial and contracted edge counts
     exercises the MID-LOOP handoff: star rounds shrink the graph,
     then the local finish takes over — output unchanged."""
-    from data_quality_check_spark.operators.dedup import (
-        connected_components_star)
-
     path = spark.createDataFrame(
         [(i, i + 1) for i in range(80)], "id_a long, id_b long")
-    want = {(i, 0) for i in range(81)}
     # 80 edges; threshold 40 skips the pre-loop handoff (contraction
     # leaves ~half the labels) but triggers after rounds shrink it
-    got = {(r.node, r.component)
-           for r in connected_components_star(
-               path, local_threshold=40).collect()}
-    assert got == want
+    assert _star(path, local_threshold=40) == {(i, 0) for i in range(81)}
 
 
 def test_phash_hamming_equals_brute_force(spark):
@@ -331,14 +326,6 @@ def test_image_keepers_match_components(spark):
     pdf = im.toPandas()
     ph = pdf.phash.to_numpy().astype(np.uint64)
     ids = list(pdf.image_id)
-    parent = {i: i for i in ids}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
     x = ph[:, None] ^ ph[None, :]
     v = x - ((x >> np.uint64(1)) & np.uint64(0x5555555555555555))
     v = (v & np.uint64(0x3333333333333333)) + (
@@ -346,11 +333,10 @@ def test_image_keepers_match_components(spark):
     v = (v + (v >> np.uint64(4))) & np.uint64(0x0F0F0F0F0F0F0F0F)
     ham = (v * np.uint64(0x0101010101010101)) >> np.uint64(56)
     iu = np.triu_indices(len(ph), k=1)
-    for i, j in zip(iu[0][ham[iu] <= 3], iu[1][ham[iu] <= 3]):
-        ra, rb = find(ids[i]), find(ids[j])
-        if ra != rb:
-            parent[max(ra, rb)] = min(ra, rb)
-    want = {(i, find(i), find(i) != i) for i in ids}
+    comp = _uf_components(
+        (ids[i], ids[j])
+        for i, j in zip(iu[0][ham[iu] <= 3], iu[1][ham[iu] <= 3]))
+    want = {(i, comp.get(i, i), comp.get(i, i) != i) for i in ids}
     assert got == want
 
 
@@ -441,15 +427,12 @@ def test_keepers_by_score_policy(spark):
     }
 
 
-def test_star_pre_contract_parity(spark):
-    """The min-contraction pre-round must not change components: same
-    output as the uncontracted star loop and as label propagation, on
-    a graph mixing a dense clique (the case contraction accelerates),
-    a long path (the case star rounds exist for), and singleton
-    self-loops."""
-    from data_quality_check_spark.operators.dedup import (
-        connected_components, connected_components_star)
-
+def test_star_contraction_parity(spark):
+    """The min-contraction pre-round must not change components: star
+    output, forced-distributed and default, equals the union-find
+    reference on a graph mixing a dense clique (the case contraction
+    accelerates), a long path (the case star rounds exist for), and
+    singleton self-loops."""
     edges = []
     # dense clique 0..29
     edges += [(i, j) for i in range(30) for j in range(i + 1, 30)]
@@ -459,14 +442,9 @@ def test_star_pre_contract_parity(spark):
     edges += [(200, 201), (300, 300)]
     df = spark.createDataFrame(edges, "id_a long, id_b long")
 
-    want = {(r.node, r.component)
-            for r in connected_components(df, max_iter=60).collect()}
-    got_star = {(r.node, r.component)
-                for r in connected_components_star(df).collect()}
-    got_plain = {(r.node, r.component)
-                 for r in connected_components_star(
-                     df, pre_contract=False).collect()}
-    assert got_star == got_plain == want
+    want = set(_uf_components(edges).items())
+    got_star = _star(df)
+    assert _star(df, local_threshold=0) == got_star == want
     comp = dict(got_star)
     assert comp[29] == 0 and comp[139] == 100 and comp[201] == 200
     assert comp[300] == 300

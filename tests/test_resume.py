@@ -121,7 +121,7 @@ def test_arbitrary_parquet_with_nulls_flows_through(spark, tmp_path):
 
 def test_concurrent_disjoint_bucket_runs_commit_cleanly(spark, catroot,
                                                         oracle_labels):
-    """The multi-executor story (tools/bench_multiproc.py): K workers
+    """The multi-executor story (checkpoint.run(buckets=...)): K workers
     over disjoint bucket ranges commit CONCURRENTLY against one
     catalog — per-bucket dynamic partition overwrites plus unique-file
     driver-side audit/ledger appends must interleave without clobbering

@@ -31,7 +31,7 @@ def main() -> None:
 
     from data_quality_check_spark.operators import dedup
     from data_quality_check_spark.operators.dedup import (
-        _gram_expr, _hashed_grams, _widen, connected_components,
+        _gram_expr, _hashed_grams, _widen, connected_components_star,
         minhash_band_table)
 
     base = spark.read.parquet(f"/root/testdata/sf{sf:g}/documents.parquet")
@@ -88,7 +88,7 @@ def main() -> None:
         t["fetch_verify"] = time.time() - t0
 
         t0 = time.time()
-        comp = connected_components(verified).localCheckpoint()
+        comp = connected_components_star(verified).localCheckpoint()
         t["components"] = time.time() - t0
 
         t0 = time.time()
