@@ -5,10 +5,12 @@ The spec (BASELINE.json:14) mandates Iceberg tables; the sandbox has
 no iceberg-spark-runtime jar and no network, so all pipeline logic is
 written against this interface:
 
-- ``LocalParquetCatalog``: directory-per-table, `bucket=NN/`
-  partition subdirs via dynamic partition overwrite, append via
-  unique-named parquet sub-files.  Gives the append/overwrite
-  atomicity the checkpoint protocol needs (manifest rename last).
+- ``LocalParquetCatalog``: directory-per-table, `bucket=NN/` /
+  `batch_id=N/` partition subdirs via dynamic partition overwrite,
+  small driver-side appends via unique-named parquet sub-files (no
+  Spark append path, so no `_temporary/0` staging dir shared across
+  writers).  Gives the append/overwrite atomicity the checkpoint
+  protocol needs (manifest rename last).
 - ``IcebergCatalog``: thin wrapper over ``spark.read.table`` /
   ``writeTo().append()`` / ``overwritePartitions()``; usable on a
   real cluster via
@@ -28,7 +30,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 class Catalog:
     def read_table(self, name: str) -> DataFrame: ...
-    def append(self, name: str, df: DataFrame) -> None: ...
     def overwrite_partitions(self, name: str, df: DataFrame, keys: list[str]) -> None: ...
     def table_exists(self, name: str) -> bool: ...
     def snapshot_id(self, name: str) -> str | None: ...
@@ -36,16 +37,7 @@ class Catalog:
     def append_small(self, name: str, rows: list, schema,
                      spark: SparkSession) -> None:
         """Append a SMALL, already-collected row set (<= wave_size
-        rows — the audit table path).  Default routes through a
-        normal Spark append; LocalParquetCatalog overrides with a
-        driver-side arrow write, which removes one Spark job per
-        wave AND is safe under concurrent writers (Spark's
-        append-mode FileOutputCommitter shares one `_temporary/0`
-        staging dir across applications, so two processes appending
-        the same directory can delete each other's pending task
-        files — concurrent multi-process pipeline runs over disjoint
-        bucket ranges hit exactly that)."""
-        self.append(name, spark.createDataFrame(rows, schema))
+        rows — the audit table path) with an explicit Spark schema."""
 
 
 def _spark_to_arrow_type(dt):
@@ -90,20 +82,24 @@ class LocalParquetCatalog(Catalog):
     def _manifest_dir(self, name: str) -> str:
         return os.path.join(self._dir(name), "_manifests")
 
-    def _data_files(self, name: str) -> list[str]:
-        """Relative paths of the table's current parquet data files.
-        An O(files) walk per commit — the sandbox stand-in for
-        Iceberg's manifest lists, which make the same enumeration
-        O(manifests) at 10^12-file scale."""
+    def _iter_data_files(self, name: str):
+        """Relative paths of the table's current parquet data files,
+        skipping every path component that starts with `_` or `.` —
+        Spark's own listing rule, so `_manifests/`, a writer's
+        `_temporary/` attempt files and `.spark-staging-*` dirs of an
+        in-flight dynamic overwrite are never part of the table."""
         d = self._dir(name)
-        out = []
-        for dirpath, _dirs, files in os.walk(d):
-            if "_manifests" in dirpath:
-                continue
+        for dirpath, dirs, files in os.walk(d):
+            dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
             for f in files:
-                if f.endswith(".parquet") and not f.startswith("."):
-                    out.append(os.path.relpath(os.path.join(dirpath, f), d))
-        return sorted(out)
+                if f.endswith(".parquet") and not f.startswith(("_", ".")):
+                    yield os.path.relpath(os.path.join(dirpath, f), d)
+
+    def _data_files(self, name: str) -> list[str]:
+        """Sorted _iter_data_files: an O(files) walk per commit — the
+        sandbox stand-in for Iceberg's manifest lists, which make the
+        same enumeration O(manifests) at 10^12-file scale."""
+        return sorted(self._iter_data_files(name))
 
     def _write_manifest(self, name: str, op: str) -> str:
         """Write-then-rename: the rename is the commit point.  The
@@ -129,22 +125,10 @@ class LocalParquetCatalog(Catalog):
 
     # -- interface ---------------------------------------------------------
     def table_exists(self, name: str) -> bool:
-        d = self._dir(name)
-        if not os.path.isdir(d):
-            return False
-        for dirpath, _dirs, files in os.walk(d):
-            if "_manifests" in dirpath:
-                continue
-            if any(f.endswith(".parquet") for f in files):
-                return True
-        return False
+        return next(self._iter_data_files(name), None) is not None
 
     def read_table(self, name: str) -> DataFrame:
         return self.spark.read.parquet(self._dir(name))
-
-    def append(self, name: str, df: DataFrame) -> None:
-        df.write.mode("append").parquet(self._dir(name))
-        self._write_manifest(name, "append")
 
     def append_rows(self, name: str, rows: list[dict]) -> None:
         """Driver-side append for tiny metadata tables (ledger): one
@@ -288,7 +272,7 @@ class IcebergCatalog(Catalog):
     def read_table(self, name: str) -> DataFrame:
         return self.spark.read.table(self._fq(name))
 
-    def append(self, name: str, df: DataFrame) -> None:
+    def _append(self, name: str, df: DataFrame) -> None:
         # first write must CREATE the table: writeTo().append() raises
         # TABLE_OR_VIEW_NOT_FOUND on a fresh catalog
         if not self.table_exists(name):
@@ -304,7 +288,11 @@ class IcebergCatalog(Catalog):
             if fld.dataType.typeName() in ("null", "void"):
                 df = df.withColumn(
                     fld.name, df[fld.name].cast("string"))
-        self.append(name, df)
+        self._append(name, df)
+
+    def append_small(self, name: str, rows: list, schema,
+                     spark: SparkSession) -> None:
+        self._append(name, spark.createDataFrame(rows, schema))
 
     def overwrite_partitions(self, name: str, df: DataFrame, keys: list[str]) -> None:
         if not self.table_exists(name):

@@ -1,39 +1,44 @@
 """Streaming data-quality monitoring: run a declarative check Suite
-(api.Suite) on every micro-batch and append per-batch reports to a
+(api.Suite) on every micro-batch and write per-batch reports to a
 catalog table — continuous DQ over an arriving table with exactly the
 batch semantics (the Suite compiles to one aggregation pass per
 micro-batch, so per-trigger cost is one scan of the new files only).
+
+Every sink here is a streaming/ingest.py::micro_batch_sink: each
+micro-batch overwrites its own batch_id partition of its table, so a
+replayed batch rewrites its rows instead of duplicating them.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .ingest import micro_batch_sink
+
+# explicit schemas for the driver-side report rows: Spark infers no
+# type for a column that is None in every row (e.g. the value of a
+# count-based check)
+_DQ_REPORT_DDL = ("`check` string, kind string, `column` string, "
+                  "violations long, total long, value double, pass boolean")
+_DRIFT_REPORT_DDL = "n_rows long, psi double, drift boolean"
+
 
 def start_dq_stream(spark: SparkSession, in_path: str, schema_ddl: str,
                     suite, catalog, checkpoint_dir: str,
                     table: str = "dq_stream_reports",
                     max_files_per_trigger: int = 4):
-    """foreachBatch bridge: per micro-batch, one Suite aggregation ->
-    one appended report row set tagged with the batch id.  Failed
-    batches are still logged (monitoring, not gating); a gating
-    variant would raise inside process() to stop the query."""
+    """Per micro-batch, one Suite aggregation -> one report row set
+    tagged with the batch id.  Failed batches are still logged
+    (monitoring, not gating); a gating variant would raise inside
+    outputs() to stop the query."""
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        report = suite.run(batch_df)
-        catalog.append_rows(table, [
-            {"batch_id": batch_id, **r} for r in report.to_rows()
-        ])
+    def outputs(batch_df: DataFrame, _batch_id: int) -> dict:
+        rows = suite.run(batch_df).to_rows()
+        return {table: spark.createDataFrame(rows, _DQ_REPORT_DDL)}
 
-    stream = (spark.readStream.schema(schema_ddl)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(in_path))
-    return (stream.writeStream
-            .foreachBatch(process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True))
+    return micro_batch_sink(spark, in_path, schema_ddl,
+                            max_files_per_trigger, checkpoint_dir,
+                            catalog, outputs)
 
 
 def start_visual_quality_stream(spark: SparkSession, in_path: str,
@@ -45,30 +50,19 @@ def start_visual_quality_stream(spark: SparkSession, in_path: str,
     shards: per micro-batch, the SAME with_image_quality operator +
     quality_report aggregation as the batch contract key
     (queries.py::q_agg_image_quality) — one fused Arrow UDF pass plus
-    a one-row reduce per trigger — appended to the catalog tagged with
+    a one-row reduce per trigger — written to the catalog tagged with
     the batch id.  Streaming/batch parity is by construction, not by a
     re-implementation: both paths call the identical operator, so a
     corpus split into micro-batches reports exactly the per-batch
     partials of the batch report (counts are additive; keep_rate is
     per-batch by design).  Monitoring, not gating — a gating variant
-    would raise in process() on keep_rate below a floor."""
+    would raise in outputs() on keep_rate below a floor."""
     from ..operators.imgquality import quality_report, with_image_quality
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        row = quality_report(
-            with_image_quality(batch_df)).collect()[0]
-        catalog.append_rows(table, [{"batch_id": batch_id,
-                                     **row.asDict()}])
-
-    stream = (spark.readStream.schema(schema_ddl)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(in_path))
-    return (stream.writeStream
-            .foreachBatch(process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True))
+    return micro_batch_sink(
+        spark, in_path, schema_ddl, max_files_per_trigger, checkpoint_dir,
+        catalog, lambda batch_df, _: {
+            table: quality_report(with_image_quality(batch_df))})
 
 
 def start_visual_risk_stream(spark: SparkSession, in_path: str,
@@ -84,20 +78,10 @@ def start_visual_risk_stream(spark: SparkSession, in_path: str,
     by construction."""
     from ..operators.imgscore import risk_report, with_image_risk
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        row = risk_report(with_image_risk(batch_df)).collect()[0]
-        catalog.append_rows(table, [{"batch_id": batch_id,
-                                     **row.asDict()}])
-
-    stream = (spark.readStream.schema(schema_ddl)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(in_path))
-    return (stream.writeStream
-            .foreachBatch(process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True))
+    return micro_batch_sink(
+        spark, in_path, schema_ddl, max_files_per_trigger, checkpoint_dir,
+        catalog, lambda batch_df, _: {
+            table: risk_report(with_image_risk(batch_df))})
 
 
 def start_drift_stream(spark: SparkSession, in_path: str,
@@ -116,7 +100,7 @@ def start_drift_stream(spark: SparkSession, in_path: str,
     max]); each micro-batch is binned with the SAME frozen edges and
     compared — one aggregation pass per trigger, state = none (the
     baseline summary is closed over, a few hundred bytes).  Batches
-    are logged, not gated; a gating variant raises in process()."""
+    are logged, not gated; a gating variant raises in outputs()."""
     import math
 
     from pyspark.sql import functions as F
@@ -145,24 +129,18 @@ def start_drift_stream(spark: SparkSession, in_path: str,
 
     base_frac, _ = _fractions(baseline)
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
+    def outputs(batch_df: DataFrame, _batch_id: int) -> dict:
         cur_frac, n = _fractions(batch_df)
         if n == 0:
-            return
+            return {}
         psi = sum((pb - pc) * math.log((pb + eps) / (pc + eps))
                   for pb, pc in zip(base_frac, cur_frac))
-        catalog.append_rows(table, [{
-            "batch_id": batch_id, "n_rows": n,
-            "psi": round(psi, 6), "drift": psi > psi_threshold,
-        }])
+        return {table: spark.createDataFrame(
+            [(n, round(psi, 6), psi > psi_threshold)], _DRIFT_REPORT_DDL)}
 
-    stream = (spark.readStream.schema(schema_ddl)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(in_path))
-    return (stream.writeStream
-            .foreachBatch(process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True))
+    return micro_batch_sink(spark, in_path, schema_ddl,
+                            max_files_per_trigger, checkpoint_dir,
+                            catalog, outputs)
 
 
 def start_decontamination_stream(spark: SparkSession, in_path: str,
@@ -176,8 +154,8 @@ def start_decontamination_stream(spark: SparkSession, in_path: str,
     shard is probed against the STATIC held-out eval split's phash
     band index (operators/dedup.py::visual_decontaminate — broadcast
     index, guaranteed pigeonhole recall), and per-image verdicts
-    (contaminated / eval_match / min_hamming) are appended to the
-    catalog.  The ingest-time twin of the batch
+    (contaminated / eval_match / min_hamming) are written to the
+    catalog per micro-batch.  The ingest-time twin of the batch
     dedup_visual_decontaminate contract key, sharing the operator
     verbatim, so stream == batch is by construction: the union of
     micro-batch verdicts equals one batch run over the union.  State
@@ -187,28 +165,15 @@ def start_decontamination_stream(spark: SparkSession, in_path: str,
     copies (operators/dedup.py::visual_decontaminate_dihedral — the
     eval index grows 8x in bit-permutation variants, the stream side
     is untouched)."""
-    from pyspark.sql import functions as F
-
     from ..operators.dedup import (visual_decontaminate,
                                    visual_decontaminate_dihedral)
 
     gate = (visual_decontaminate_dihedral if dihedral
             else visual_decontaminate)
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        out = gate(batch_df, eval_df, max_hamming)
-        catalog.append(table, out.withColumn(
-            "batch_id", F.lit(batch_id).cast("long")))
-
-    stream = (spark.readStream.schema(schema_ddl)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(in_path))
-    return (stream.writeStream
-            .foreachBatch(process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True))
+    return micro_batch_sink(
+        spark, in_path, schema_ddl, max_files_per_trigger, checkpoint_dir,
+        catalog, lambda batch_df, _: {
+            table: gate(batch_df, eval_df, max_hamming)})
 
 
 def start_semantic_contamination_stream(spark: SparkSession,
@@ -222,31 +187,19 @@ def start_semantic_contamination_stream(spark: SparkSession,
     shard is scored against the static held-out eval split
     (operators/dq.py::split_contamination with the roles transposed —
     here the STREAM side is 'train' and the broadcast eval is fixed),
-    appending per-eval-row contamination verdicts per micro-batch.
+    writing per-eval-row contamination verdicts per micro-batch.
     The ingest-time twin of the batch dq_split_contamination key,
     sharing the operator verbatim; catches the paraphrased /
     re-encoded eval copies the n-gram and phash gates structurally
     miss.  State = none (the eval set is closed over and re-broadcast
     per trigger; audits over accumulated history re-run the batch
     operator over the union)."""
-    from pyspark.sql import functions as F
-
     from ..operators.dq import split_contamination
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        out = split_contamination(batch_df, eval_df, threshold)
-        catalog.append(table, out.withColumn(
-            "batch_id", F.lit(batch_id).cast("long")))
-
-    stream = (spark.readStream.schema(schema_ddl)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(in_path))
-    return (stream.writeStream
-            .foreachBatch(process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True))
+    return micro_batch_sink(
+        spark, in_path, schema_ddl, max_files_per_trigger, checkpoint_dir,
+        catalog, lambda batch_df, _: {
+            table: split_contamination(batch_df, eval_df, threshold)})
 
 
 def start_audio_quality_stream(spark: SparkSession, in_path: str,
@@ -258,23 +211,12 @@ def start_audio_quality_stream(spark: SparkSession, in_path: str,
     audio shards — the audio twin of start_visual_quality_stream:
     per micro-batch, the SAME with_audio_quality operator +
     quality_report aggregation as the batch contract key
-    (queries.py::q_agg_audio_quality), appended to the catalog tagged
+    (queries.py::q_agg_audio_quality), written to the catalog tagged
     with the batch id.  Stream/batch parity is by construction (both
     paths call the identical operator; counts are additive)."""
     from ..operators.audioquality import quality_report, with_audio_quality
 
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        row = quality_report(
-            with_audio_quality(batch_df)).collect()[0]
-        catalog.append_rows(table, [{"batch_id": batch_id,
-                                     **row.asDict()}])
-
-    stream = (spark.readStream.schema(schema_ddl)
-              .option("maxFilesPerTrigger", max_files_per_trigger)
-              .parquet(in_path))
-    return (stream.writeStream
-            .foreachBatch(process)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True))
+    return micro_batch_sink(
+        spark, in_path, schema_ddl, max_files_per_trigger, checkpoint_dir,
+        catalog, lambda batch_df, _: {
+            table: quality_report(with_audio_quality(batch_df))})

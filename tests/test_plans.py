@@ -135,6 +135,32 @@ def test_catalog_time_travel(spark, tmp_path):
         == {(0, "A"), (1, "b")}
 
 
+def test_catalog_listing_skips_hidden_and_staging(tmp_path):
+    """A table's files are those Spark itself would list: no path
+    component may start with `_` or `.`.  Another writer's in-flight
+    `_temporary/` attempt files and `.spark-staging-*` dynamic-
+    overwrite dirs must never be pinned by a manifest nor make a
+    table 'exist'.  Files laid out by hand: no Spark write."""
+    from data_quality_check_spark.plans.catalog import LocalParquetCatalog
+
+    cat = LocalParquetCatalog(None, str(tmp_path))
+    for rel in ["tbl/bucket=0/part-a.parquet",
+                "tbl/bucket=0/.part-a.parquet.tmp.parquet",
+                "tbl/.spark-staging-123/bucket=1/part-c.parquet",
+                "tbl/_temporary/0/_temporary/attempt_1/part-b.parquet",
+                "tbl/_manifests/part-m.parquet",
+                "staged/_temporary/0/part-x.parquet"]:
+        path = tmp_path / rel
+        path.parent.mkdir(parents=True, exist_ok=True)
+        path.write_bytes(b"")
+
+    assert cat._data_files("tbl") == ["bucket=0/part-a.parquet"]
+    assert cat.table_exists("tbl")
+    assert not cat.table_exists("staged")
+    assert cat._data_files("staged") == []
+    assert not cat.table_exists("missing")
+
+
 def test_ngram_jaccard_band_join_is_ids_only(spark):
     """Candidate generation for ngram_jaccard_pairs must be ids-only:
     gram arrays (the widest payload in the plan) may appear in the

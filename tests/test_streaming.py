@@ -58,7 +58,7 @@ def test_stream_matches_batch(spark, shard_dir, oracle_labels):
 
 def test_streaming_dq_reports_per_batch(spark, shard_dir):
     """Streaming DQ monitoring: one Suite report row-set per
-    micro-batch, appended to the catalog like audit rows."""
+    micro-batch, written to the catalog tagged with its batch id."""
     from data_quality_check_spark.api import Suite, checks as C
     from data_quality_check_spark.plans.catalog import LocalParquetCatalog
     from data_quality_check_spark.streaming.dq import start_dq_stream
@@ -232,11 +232,11 @@ def test_stream_stream_interval_join(spark, shard_dir):
 
 
 def test_stream_restart_resumes_exactly_once(spark, shard_dir):
-    """Checkpointed restart: a second availableNow run with the SAME
-    checkpoint processes only shards that arrived after the first run
-    — no reprocessing, no duplicate verdicts — and a REPLAYED batch
-    is idempotent because each micro-batch overwrites its own
-    batch_id partition instead of blind-appending."""
+    """Checkpointed restart after a COMPLETED run: a second
+    availableNow run with the SAME checkpoint processes only shards
+    that arrived after the first run — no reprocessing, no duplicate
+    verdicts.  A REPLAYED (uncommitted) batch is covered by
+    tests/test_streaming_replay.py."""
     pdf = IM.generate_pandas(0.001)
     chunks = (pdf.iloc[:500], pdf.iloc[500:])
     out_root = tempfile.mkdtemp(prefix="dqc-stream-restart-")

@@ -39,9 +39,7 @@ def _shards():
             docs.iloc[2 * third:]]
 
 
-def test_stream_equals_sequential_batches(spark, dirs):
-    ind, outd = dirs
-    shards = _shards()
+def write_shards(ind: str, shards) -> None:
     for i, chunk in enumerate(shards):
         p = os.path.join(ind, f"shard{i}.parquet")
         pq.write_table(pa.Table.from_pandas(chunk, preserve_index=False),
@@ -53,23 +51,13 @@ def test_stream_equals_sequential_batches(spark, dirs):
         # pin strictly increasing mtimes
         os.utime(p, (1_700_000_000 + i, 1_700_000_000 + i))
 
-    cat = LocalParquetCatalog(spark, outd)
-    q = start_incremental_dedup_stream(
-        spark, ind, "doc_id long, text string", cat,
-        checkpoint_dir=os.path.join(outd, "ckpt"),
-        max_files_per_trigger=1).start()
-    assert q.awaitTermination(180)
-    assert q.exception() is None
 
-    got_keepers = sorted(r.doc_id for r in
-                         cat.read_table("corpus_keepers").collect())
-    status = cat.read_table("dedup_stream_status")
-    assert status.count() == sum(len(s) for s in shards)
-
-    # sequential batch-mode reference over the same shard order
+def sequential_reference(spark, shards) -> tuple[list[int], dict[int, str]]:
+    """Sequential batch-mode incremental_dedup over the shards in
+    order: (sorted keeper ids, {doc id: status})."""
     corpus = spark.createDataFrame([], "doc_id long, text string")
     want_status: dict[int, str] = {}
-    for chunk in _shards():
+    for chunk in shards:
         batch = spark.createDataFrame(chunk)
         res = incremental_dedup(batch, corpus, "text", "doc_id")
         rows = res.collect()
@@ -78,11 +66,37 @@ def test_stream_equals_sequential_batches(spark, dirs):
         corpus = corpus.unionAll(
             batch.filter(F.col("doc_id").isin(list(new_ids)))
         ).localCheckpoint()
+    return sorted(r.doc_id for r in corpus.collect()), want_status
 
-    want_keepers = sorted(r.doc_id for r in corpus.collect())
+
+def stream_state(cat) -> tuple[list[int], dict[int, str]]:
+    """The stream's (sorted keeper ids, {doc id: status})."""
+    keepers = sorted(r.doc_id for r in
+                     cat.read_table("corpus_keepers").collect())
+    status = {r.id: r.status for r in cat.read_table(
+        "dedup_stream_status").select("id", "status").collect()}
+    return keepers, status
+
+
+def test_stream_equals_sequential_batches(spark, dirs):
+    ind, outd = dirs
+    shards = _shards()
+    write_shards(ind, shards)
+
+    cat = LocalParquetCatalog(spark, outd)
+    q = start_incremental_dedup_stream(
+        spark, ind, "doc_id long, text string", cat,
+        checkpoint_dir=os.path.join(outd, "ckpt"),
+        max_files_per_trigger=1).start()
+    assert q.awaitTermination(180)
+    assert q.exception() is None
+
+    status = cat.read_table("dedup_stream_status")
+    assert status.count() == sum(len(s) for s in shards)
+
+    want_keepers, want_status = sequential_reference(spark, shards)
+    got_keepers, got_status = stream_state(cat)
     assert got_keepers == want_keepers
-    got_status = {r.id: r.status for r in
-                  status.select("id", "status").collect()}
     assert got_status == want_status
     # the fixture has exact dups: some doc must be deduped against a
     # keeper from an earlier batch or within-batch

@@ -13,7 +13,6 @@ import pyarrow.parquet as pq
 import pytest
 
 from data_quality_check_spark.sources import images as IM
-from data_quality_check_spark.streaming.ingest import read_image_stream
 from data_quality_check_spark.streaming.stateful import streaming_dedup
 
 
@@ -35,7 +34,8 @@ def test_cross_batch_dedup(spark, dirs):
                                    preserve_index=False)
         pq.write_table(tbl, os.path.join(ind, f"shard{i}.parquet"))
 
-    stream = read_image_stream(spark, ind, max_files_per_trigger=1)
+    stream = (spark.readStream.schema(IM.IMAGES_DDL)
+              .option("maxFilesPerTrigger", 1).parquet(ind))
     q = (
         streaming_dedup(stream)
         .writeStream.format("parquet")
