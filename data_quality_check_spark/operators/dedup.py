@@ -8,6 +8,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+_I64_MIN = "-9223372036854775807 - 1"  # min long; the bare literal
+# does not parse as int64 in either engine (unary minus binds after
+# the out-of-range positive literal)
+
 
 def with_dup_rank(df: DataFrame, key: str = "phash",
                   order: str = "image_id") -> DataFrame:
@@ -152,26 +156,26 @@ def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     faster and is branch-free per bit (ones_i = sum((h>>i)&1); bit
     set iff 2*ones_i > n_tokens, identical to the +/-1 vote sum).
     The groupBy shuffle is one partial-aggregated row of 65 longs per
-    doc — the same shuffle-volume class as the dup-rank window."""
+    doc — the same shuffle-volume class as the dup-rank window.
+    Aggregates and fold are SQL text (same tree as the Column DSL, but
+    ~450 driver py4j round trips per build instead of ~9.7k)."""
     toks = F.filter(F.split(F.lower(F.col(text_col)), " "),
                     lambda t: t != F.lit(""))
-    # explode_outer keeps zero-token docs (null hash contributes to
-    # no bit count and count("__h") ignores it => simhash 0)
+    # explode_outer keeps a zero-token doc as one null token, and
+    # xxhash64 of a null is the seed 42, so the doc's simhash is 42
     tokd = (_widen(df)
             .select(F.col(id_col), F.explode_outer(toks).alias("__t"))
             .select(F.col(id_col), F.xxhash64("__t").alias("__h")))
-    aggs = [F.sum(F.shiftright("__h", i).bitwiseAND(F.lit(1))).alias(f"o{i}")
+    aggs = [F.expr(f"sum(shiftright(__h, {i}) & 1) AS o{i}")
             for i in range(64)]
     g = tokd.groupBy(id_col).agg(F.count("__h").alias("n"), *aggs)
-    # fold 64 majority bits -> one bigint; bit 63 via the negative
-    # literal to stay inside signed int64
-    sim = F.lit(0).cast("bigint")
-    for i in range(64):
-        sim = sim.bitwiseOR(
-            F.when(2 * F.coalesce(F.col(f"o{i}"), F.lit(0)) > F.col("n"),
-                   F.lit(-(1 << 63) if i == 63 else (1 << i)).cast("bigint"))
-            .otherwise(F.lit(0).cast("bigint")))
-    return g.select(F.col(id_col), sim.alias("simhash"))
+    # fold 64 majority bits -> one bigint; bit 63 via _I64_MIN to stay
+    # inside signed int64
+    bits = [f"CASE WHEN coalesce(o{i}, 0) * 2 > n "
+            f"THEN CAST({_I64_MIN if i == 63 else 1 << i} AS BIGINT) "
+            "ELSE CAST(0 AS BIGINT) END" for i in range(64)]
+    sim = " | ".join(["CAST(0 AS BIGINT)", *bits])
+    return g.select(F.col(id_col), F.expr(f"{sim} AS simhash"))
 
 
 def _hashed_grams(grams):
@@ -706,29 +710,29 @@ def phash_band_table(df: DataFrame, max_hamming: int = 3,
     in [0, nb) and sub-slice ids in [nb, nb + nb^2), so the two
     families can never cross-join.  The ~40-term sub-key assembly
     sits under the conditional, so content with healthy slice
-    entropy skips it entirely (codegen short-circuits the If)."""
+    entropy skips it entirely (codegen short-circuits the If).
+    The key array is one SQL string (same tree as the Column DSL, but
+    ~130 driver py4j round trips per build instead of ~8k)."""
     nb = max_hamming + 1
     w = 64 // nb
     src = (df.select(F.col(id_col).alias("__id"),
                      F.col(phash_col).alias("__ph"))
            .filter(F.col("__ph").isNotNull()))
 
-    def sub_structs(b: int, lo: int, hi: int, bv, band_off: int) -> list:
+    def sub_keys(b: int, lo: int, hi: int, bv: str, band_off: int) -> str:
         out = []
         for s in range(nb):
             pos = [p for p in range(64)
                    if not (lo <= p < hi) and p % nb == s]
-            sv = F.lit(0).cast("long")
-            for j, p in enumerate(pos):
-                sv = sv.bitwiseOR(F.shiftleft(
-                    F.shiftrightunsigned("__ph", p)
-                     .bitwiseAND(F.lit(1)), j))
+            sv = " | ".join(
+                ["CAST(0 AS BIGINT)"]
+                + [f"shiftleft(shiftrightunsigned(__ph, {p}) & 1, {j})"
+                   for j, p in enumerate(pos)])
             # bv < 2^32 (nb >= 2) and sv < 2^22, so bv<<22 | sv is a
             # collision-free packed key well inside int64
-            out.append(F.struct(
-                F.lit(band_off + b * nb + s).alias("band"),
-                F.shiftleft(bv, 22).bitwiseOR(sv).alias("bv")))
-        return out
+            out.append(f"struct({band_off + b * nb + s} AS band, "
+                       f"shiftleft({bv}, 22) | ({sv}) AS bv)")
+        return f"array({', '.join(out)})"
 
     parts = []
     for b in range(nb):
@@ -736,24 +740,20 @@ def phash_band_table(df: DataFrame, max_hamming: int = 3,
         mask = (1 << width) - 1
         # shiftrightunsigned: bit 63 must not smear sign bits into
         # the high slice
-        bv = (F.shiftrightunsigned("__ph", b * w)
-              .bitwiseAND(F.lit(mask)))
+        bv = f"(shiftrightunsigned(__ph, {b * w}) & {mask})"
         lo, hi = b * w, b * w + width
+        one = f"array(struct({b} AS band, {bv} AS bv))"
         if two_level:
-            parts.append(F.array(*sub_structs(b, lo, hi, bv, 0)))
+            parts.append(sub_keys(b, lo, hi, bv, 0))
         elif hybrid:
-            pc = F.bit_count(bv)
-            deg = (pc <= 1) | (pc >= width - 1)
-            one = F.array(F.struct(F.lit(b).alias("band"),
-                                   bv.alias("bv")))
-            parts.append(F.when(
-                deg, F.array(*sub_structs(b, lo, hi, bv, nb)))
-                .otherwise(one))
+            pc = f"bit_count({bv})"
+            parts.append(f"CASE WHEN ({pc} <= 1 OR {pc} >= {width - 1}) "
+                         f"THEN {sub_keys(b, lo, hi, bv, nb)} "
+                         f"ELSE {one} END")
         else:
-            parts.append(F.array(F.struct(F.lit(b).alias("band"),
-                                          bv.alias("bv"))))
-    arr = parts[0] if len(parts) == 1 else F.concat(*parts)
-    return (src.select("__id", "__ph", F.explode(arr).alias("s"))
+            parts.append(one)
+    arr = parts[0] if len(parts) == 1 else f"concat({', '.join(parts)})"
+    return (src.select("__id", "__ph", F.explode(F.expr(arr)).alias("s"))
             .select("__id", "__ph", "s.band", "s.bv"))
 
 
@@ -1388,10 +1388,6 @@ def _dihedral_inverse() -> list[int]:
 
 
 _DIHEDRAL_INV = _dihedral_inverse()
-
-_I64_MIN = "-9223372036854775807 - 1"  # min long; the bare literal
-# does not parse as int64 in either engine (unary minus binds after
-# the out-of-range positive literal)
 
 
 def dihedral_phash_sql(col: str) -> list[str]:

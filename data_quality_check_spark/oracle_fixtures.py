@@ -171,6 +171,24 @@ def _minhash_sig_py(text: str, num_hashes: int = 16,
     return sig
 
 
+def _simhash64_py(text: str | None) -> int:
+    """Driver-side twin of operators/dedup.py::simhash64 for one doc
+    (signed int64): per-token xxhash64 of the lowered text split on
+    single spaces, bit i set iff 2 * ones_i > n_tokens.  A doc with no
+    tokens (null, empty or blank text) reaches the engine's aggregate
+    as one null token, and xxhash64 of a null is the seed, so it votes
+    as one token hashing to SEED."""
+    from .kernels.xxh64 import SEED, hash_string
+
+    toks = [t for t in (text or "").lower().split(" ") if t != ""]
+    hs = [hash_string(t) for t in toks] or [SEED]
+    u = 0
+    for i in range(64):
+        if 2 * sum((h >> i) & 1 for h in hs) > len(hs):
+            u |= 1 << i
+    return u - (1 << 64) if u >= (1 << 63) else u
+
+
 def ensure_hash_fixtures(sf: float = 0.01,
                          root: str = "/root/repo/data",
                          testdata_dir: str = "/root/testdata/sf0.01",
@@ -189,7 +207,7 @@ def ensure_hash_fixtures(sf: float = 0.01,
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from .kernels.xxh64 import hash_long, hash_string
+    from .kernels.xxh64 import hash_long
 
     paths = {
         "doc_minhash": os.path.join(root, f"doc_minhash_sf{sf:g}.parquet"),
@@ -247,20 +265,7 @@ def ensure_hash_fixtures(sf: float = 0.01,
     os.replace(tmp, paths["doc_minhash_sigs"])
 
     # ---- simhash (doc_id, simhash) ------------------------------------
-    sims = []
-    for text in docs["text"]:
-        toks = [t for t in text.lower().split(" ") if t != ""]
-        if not toks:
-            sims.append(0)
-            continue
-        hs = [hash_string(t) for t in toks]
-        nt = len(hs)
-        u = 0
-        for i in range(64):
-            ones = sum((h >> i) & 1 for h in hs)
-            if 2 * ones > nt:
-                u |= 1 << i
-        sims.append(u - (1 << 64) if u >= (1 << 63) else u)
+    sims = [_simhash64_py(text) for text in docs["text"]]
     sh = pd.DataFrame({"doc_id": docs["doc_id"].astype("int64"),
                        "simhash": pd.Series(sims, dtype="int64")})
     _write(paths["doc_simhash"], sh)

@@ -56,20 +56,6 @@ def micro_batch_sink(spark: SparkSession, in_path: str, schema_ddl: str,
             .trigger(availableNow=True))
 
 
-def ingest_counts(stream: DataFrame, watermark: str = "10 minutes",
-                  window: str = "1 minute") -> DataFrame:
-    """Tumbling-window ingest counts keyed by fmt with late-data
-    tolerance.  The images schema has no event time, so arrival time
-    is stamped at ingest (deterministic inputs get one in tests)."""
-    stamped = stream.withColumn("ingest_ts", F.current_timestamp())
-    return (
-        stamped.withWatermark("ingest_ts", watermark)
-        .groupBy(F.window("ingest_ts", window).alias("win"), "fmt")
-        .agg(F.count("*").alias("n_images"),
-             F.sum(F.length("bytes")).alias("n_bytes"))
-    )
-
-
 def start_quality_stream(spark: SparkSession, in_path: str, out_root: str,
                          checkpoint_dir: str,
                          max_files_per_trigger: int = 4):

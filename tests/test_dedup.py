@@ -4,6 +4,13 @@ SimHash / Jaccard kernels."""
 
 from __future__ import annotations
 
+import gc
+import itertools
+import random
+
+import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from data_quality_check_spark.operators import dedup
@@ -30,6 +37,50 @@ def _uf_components(pairs) -> dict:
         if ra != rb:
             parent[max(ra, rb)] = min(ra, rb)
     return {x: find(x) for x in parent}
+
+
+def _band_keys_py(h: int, max_hamming: int, mode: str) -> set:
+    """Pure-Python reference of phash_band_table's keys for one signed
+    int64 hash: {(band, bv)} for mode "one" (one-level), "two_level"
+    or "hybrid"."""
+    u = h & ((1 << 64) - 1)
+    nb = max_hamming + 1
+    w = 64 // nb
+    keys = set()
+    for b in range(nb):
+        lo = b * w
+        width = w if b < nb - 1 else 64 - lo
+        bv = (u >> lo) & ((1 << width) - 1)
+        pc = bin(bv).count("1")
+        if mode == "one" or (mode == "hybrid" and 1 < pc < width - 1):
+            keys.add((b, bv))
+            continue
+        off = nb if mode == "hybrid" else 0
+        for s in range(nb):
+            pos = [p for p in range(64)
+                   if not lo <= p < lo + width and p % nb == s]
+            sv = sum(((u >> p) & 1) << j for j, p in enumerate(pos))
+            keys.add((off + b * nb + s, bv << 22 | sv))
+    return keys
+
+
+def _spark_band_keys(spark, hashes, max_hamming: int, mode: str) -> dict:
+    """{id: sorted [(band, bv)]} from phash_band_table over `hashes`
+    (id = list index)."""
+    df = spark.createDataFrame(list(enumerate(hashes)),
+                               "image_id long, phash long")
+    got: dict = {}
+    for r in dedup.phash_band_table(
+            df, max_hamming, two_level=mode == "two_level",
+            hybrid=mode == "hybrid").collect():
+        assert r["__ph"] == hashes[r["__id"]]
+        got.setdefault(r["__id"], []).append((r["band"], r["bv"]))
+    return {i: sorted(k) for i, k in got.items()}
+
+
+def _signed64(u: int) -> int:
+    u &= (1 << 64) - 1
+    return u - (1 << 64) if u >= (1 << 63) else u
 
 
 def _star(df, **kw) -> set:
@@ -106,6 +157,28 @@ def test_simhash_hamming_separation(spark):
     assert ham(sh[1], sh[3]) <= 8
     assert ham(sh[1], sh[4]) >= 16
     assert ham(sh[1], sh[5]) >= 16
+
+
+def test_simhash_matches_python_twin(spark):
+    """simhash64 equals the pure-Python twin that writes the
+    dedup_simhash fixture, value for value, including zero-token docs
+    (null, empty, blank) and hashes with bit 63 set."""
+    from data_quality_check_spark.oracle_fixtures import _simhash64_py
+
+    rng = random.Random(7)
+    words = BASE.split() + ["der", "alte", "mann", "brücke", "café",
+                            "MIXED", "Case", "x"]
+    texts = [BASE, "a b", "", "   ", None, " lead  and trail ", "x",
+             "x x y", "a b a b"]
+    texts += [" ".join(rng.choice(words) for _ in range(rng.randint(1, 30)))
+              for _ in range(60)]
+    d = spark.createDataFrame(list(enumerate(texts)),
+                              "doc_id long, text string")
+    got = {r.doc_id: r.simhash
+           for r in dedup.simhash64(d, "text", "doc_id").collect()}
+    want = {i: _simhash64_py(t) for i, t in enumerate(texts)}
+    assert got == want
+    assert any(v < 0 for v in got.values()), "no hash with bit 63 set"
 
 
 def test_ngram_jaccard_pair_detection(spark):
@@ -286,6 +359,110 @@ def test_phash_hamming_equals_brute_force(spark):
             want.add(tuple(sorted((ia, ib))) + (ham,))
     assert got == want
     assert ("a", "b", 3) in got and ("d", "e", 1) in got
+
+
+def _band_test_hashes() -> list:
+    """Edge values, single-bit hashes and their complements (slices
+    one bit off all-zero / all-one), hashes with an all-zero or
+    all-one run next to random bits, seeded random hashes, and for a
+    third of them a partner at 1..8 flipped bits (recall check)."""
+    rng = random.Random(20240)
+    base = [0, -1, 1, (1 << 63) - 1, -(1 << 63), -(1 << 63) + 1]
+    base += [_signed64(1 << i) for i in range(64)]
+    base += [_signed64(~(1 << i)) for i in range(64)]
+    for _ in range(40):
+        u = rng.getrandbits(64)
+        lo = rng.choice([0, 7, 13, 21, 32])
+        hi = lo + rng.choice([7, 13, 16])
+        fill = rng.choice([0, (1 << 64) - 1])
+        for p in range(lo, min(hi, 64)):
+            u = u & ~(1 << p) | (fill & (1 << p))
+        base.append(_signed64(u))
+    base += [_signed64(rng.getrandbits(64)) for _ in range(60)]
+    near = []
+    for h in base[::3]:
+        flips = rng.sample(range(64), rng.randint(1, 8))
+        near.append(_signed64(h ^ sum(1 << p for p in flips)))
+    return base + near
+
+
+@pytest.mark.parametrize("mode", ["one", "two_level", "hybrid"])
+@pytest.mark.parametrize("max_hamming", [1, 2, 3, 4, 8])
+def test_phash_band_keys_match_reference(spark, max_hamming, mode):
+    """phash_band_table emits exactly the pure-Python reference keys
+    per id, and every pair within max_hamming shares a key (the
+    pigeonhole recall guarantee)."""
+    hashes = _band_test_hashes()
+    got = _spark_band_keys(spark, hashes, max_hamming, mode)
+    want = {i: sorted(_band_keys_py(h, max_hamming, mode))
+            for i, h in enumerate(hashes)}
+    assert got == want
+    nb = max_hamming + 1
+    if mode == "hybrid":
+        bands = {b for keys in got.values() for b, _ in keys}
+        assert min(bands) < nb <= max(bands), "hybrid took one branch"
+    keysets = {i: set(k) for i, k in got.items()}
+    close = 0
+    for i, j in itertools.combinations(range(len(hashes)), 2):
+        if bin((hashes[i] ^ hashes[j]) & ((1 << 64) - 1)).count("1") \
+                <= max_hamming:
+            close += 1
+            assert keysets[i] & keysets[j], (hashes[i], hashes[j])
+    assert close >= 10
+
+
+@settings(max_examples=12, deadline=None, derandomize=True)
+@given(st.lists(st.integers(-(1 << 63), (1 << 63) - 1), min_size=1,
+                max_size=40),
+       st.sampled_from([1, 2, 3, 4, 8]),
+       st.sampled_from(["one", "two_level", "hybrid"]))
+def test_phash_band_keys_hypothesis(spark, hashes, max_hamming, mode):
+    got = _spark_band_keys(spark, hashes, max_hamming, mode)
+    assert got == {i: sorted(_band_keys_py(h, max_hamming, mode))
+                   for i, h in enumerate(hashes)}
+
+
+@pytest.mark.parametrize(
+    "build", ["band_one", "band_two_level", "band_hybrid", "simhash64"])
+def test_driver_round_trip_budget(spark, build):
+    """Building (not running) the band table and the simhash plan
+    stays under 500 py4j commands: generated expressions with hundreds
+    of terms go to the JVM as one SQL string, not as thousands of
+    Column-DSL calls (built from those, two_level, hybrid and
+    simhash64 took 7,784 / 8,152 / 9,689 commands).
+    Memory-delete commands are not counted: they free proxies of
+    earlier objects whenever Python drops them, which gc.collect() /
+    gc.disable() around the count do not fully hold back."""
+    from py4j import protocol
+
+    band = spark.createDataFrame([(1, 5), (2, -1)],
+                                 "image_id long, phash long")
+    docs = _docs(spark)
+    build_plan = {
+        "band_one": lambda: dedup.phash_band_table(band, 3),
+        "band_two_level": lambda: dedup.phash_band_table(
+            band, 3, two_level=True),
+        "band_hybrid": lambda: dedup.phash_band_table(band, 3, hybrid=True),
+        "simhash64": lambda: dedup.simhash64(docs, "text", "doc_id"),
+    }[build]
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    sent = []
+
+    def counting(command, *a, **kw):
+        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+            sent.append(command)
+        return send(command, *a, **kw)
+
+    gc.collect()
+    gc.disable()
+    client.send_command = counting
+    try:
+        build_plan()
+    finally:
+        client.send_command = send
+        gc.enable()
+    assert len(sent) < 500, len(sent)
 
 
 def test_phash_hamming_fixture_counts(spark):
