@@ -33,23 +33,11 @@ def exact_dedup(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     )
 
 
-def _shingles(text_col: str, k: int = 5):
-    """Character k-shingles of the lowercased text as an array column.
-
-    IMPORTANT: pass a bare column NAME of an ALREADY-LOWERED column
-    when building hot paths — an inline `lower(text)` here would be
-    re-evaluated on every lambda invocation (once per shingle), an
-    O(len^2) rescan that measured ~10x slower than hoisting lower()
-    into its own projection first."""
-    lowered = F.lower(F.col(text_col))
-    n = F.greatest(F.length(lowered) - F.lit(k - 1), F.lit(1))
-    return F.transform(
-        F.sequence(F.lit(1), n), lambda i: F.substring(lowered, i, k))
-
-
 def _shingles_of(lowered_col: str, k: int = 5):
     """k-shingles over a pre-lowered column REFERENCE: the lambda body
-    touches only a row attribute, so each shingle is O(k)."""
+    touches only a row attribute, so each shingle is O(k).  An inline
+    `lower(text)` in the lambda would be re-evaluated once per
+    shingle, an O(len^2) rescan (measured ~10x slower)."""
     n = F.greatest(F.length(lowered_col) - F.lit(k - 1), F.lit(1))
     return F.transform(
         F.sequence(F.lit(1), n),
@@ -61,7 +49,10 @@ def _widen(df: DataFrame) -> DataFrame:
     default parallelism: a small single-file scan arrives as ONE task,
     which would serialize the (interpreted, HOF-heavy) signature
     computation on one core.  No-op on well-partitioned inputs, so at
-    production scale this never adds a shuffle."""
+    production scale this never adds a shuffle.  A streaming frame is
+    returned as is: it has no partitions to count."""
+    if df.isStreaming:
+        return df
     try:
         target = df.sparkSession.sparkContext.defaultParallelism
         if df.rdd.getNumPartitions() < target:
@@ -109,36 +100,49 @@ def minhash_signatures(df: DataFrame, text_col: str, id_col: str,
     return base.select(F.col(id_col), sig.alias("sig"))
 
 
-def minhash_lsh_dups(df: DataFrame, text_col: str, id_col: str,
-                     num_hashes: int = 16, bands: int = 4,
-                     shingle_k: int = 5) -> DataFrame:
-    """LSH banding: split the signature into `bands` bands, hash each
-    band, group by (band_idx, band_hash); groups with >1 member are
-    near-dup candidate clusters.  Returns one scalar row per candidate
-    cluster: (band, band_hash, n, keeper_id) — first-wins keeper.
-    Scale path: the only shuffle is the groupBy on the 64-bit band
-    hash, and the aggregation state is two fixed-width values (min +
-    count), so a viral duplicate cluster costs O(1) reducer memory
-    (the r1 collect_set(members) was unbounded)."""
+def minhash_band_table(df: DataFrame, text_col: str, id_col: str,
+                       num_hashes: int = 16, bands: int = 4,
+                       shingle_k: int = 5) -> DataFrame:
+    """The LSH *index* as a DataFrame: (__id, band, bh) — one row per
+    (doc, band), bh = hash of that band's signature slice.  The only
+    place MinHash bands are made: the candidate pairs, the cluster
+    groupBy, the incremental probe and the streaming candidates all
+    read it.
+    This is the thing a production deployment PERSISTS (a few dozen
+    bytes per doc) so tomorrow's crawl batch joins against it instead
+    of re-signaturing 10^12 existing docs (see incremental_dedup)."""
     rows_per_band = num_hashes // bands
     sigs = minhash_signatures(_widen(df), text_col, id_col,
                               num_hashes, shingle_k)
-    banded = sigs.select(
-        id_col,
+    return sigs.select(
+        F.col(id_col).alias("__id"),
         F.explode(F.array(*[
             F.struct(
                 F.lit(b).alias("band"),
-                F.xxhash64(*[
-                    F.col("sig")[b * rows_per_band + r]
-                    for r in range(rows_per_band)
-                ]).alias("band_hash"),
+                F.xxhash64(*[F.col("sig")[b * rows_per_band + r]
+                             for r in range(rows_per_band)]).alias("bh"),
             )
             for b in range(bands)
         ])).alias("bb"),
-    )
+    ).select("__id", "bb.band", "bb.bh")
+
+
+def minhash_lsh_dups(df: DataFrame, text_col: str, id_col: str,
+                     num_hashes: int = 16, bands: int = 4,
+                     shingle_k: int = 5) -> DataFrame:
+    """LSH banding: group the band table by (band, band_hash); groups
+    with >1 member are near-dup candidate clusters.  Returns one
+    scalar row per candidate cluster: (band, band_hash, keeper_id, n)
+    — first-wins keeper.  Scale path: the only shuffle is the groupBy
+    on the 64-bit band hash, and the aggregation state is two
+    fixed-width values (min + count), so a viral duplicate cluster
+    costs O(1) reducer memory (the r1 collect_set(members) was
+    unbounded)."""
     return (
-        banded.groupBy("bb.band", "bb.band_hash")
-        .agg(F.min(id_col).alias("keeper_id"),
+        minhash_band_table(df, text_col, id_col, num_hashes, bands,
+                           shingle_k)
+        .groupBy("band", F.col("bh").alias("band_hash"))
+        .agg(F.min("__id").alias("keeper_id"),
              F.count("*").alias("n"))
         .filter(F.col("n") > 1)
     )
@@ -159,12 +163,11 @@ def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     doc — the same shuffle-volume class as the dup-rank window.
     Aggregates and fold are SQL text (same tree as the Column DSL, but
     ~450 driver py4j round trips per build instead of ~9.7k)."""
-    toks = F.filter(F.split(F.lower(F.col(text_col)), " "),
-                    lambda t: t != F.lit(""))
     # explode_outer keeps a zero-token doc as one null token, and
     # xxhash64 of a null is the seed 42, so the doc's simhash is 42
     tokd = (_widen(df)
-            .select(F.col(id_col), F.explode_outer(toks).alias("__t"))
+            .select(F.col(id_col),
+                    F.explode_outer(_word_tokens(text_col)).alias("__t"))
             .select(F.col(id_col), F.xxhash64("__t").alias("__h")))
     aggs = [F.expr(f"sum(shiftright(__h, {i}) & 1) AS o{i}")
             for i in range(64)]
@@ -178,31 +181,68 @@ def simhash64(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     return g.select(F.col(id_col), F.expr(f"{sim} AS simhash"))
 
 
-def _hashed_grams(grams):
-    """xxhash64 each gram: 8-byte integer compares instead of 15-30
-    char string compares in array_intersect, and ~3x narrower
-    shuffle/join payloads.  Jaccard over hashed grams equals Jaccard
-    over the strings unless two DISTINCT grams of the same doc pair
-    collide in 64 bits (~|grams|^2 * 2^-64 per pair — vanishing at
-    any realistic doc size; MinHash itself already rests on hashed
-    shingles).  A/B on the 5x text corpus: the candidate-verify
-    stage dropped 6.9 -> 2.5 s at 8 cores / 10.7 -> 4.6 s at 2, same
-    56,400 verified pairs.  The lambda touches only its element, so
-    the CLAUDE.md HOF re-evaluation trap does not apply."""
-    return F.transform(grams, lambda g: F.xxhash64(g))
+def _word_tokens(text):
+    """The one word tokenizer of the text operators: whitespace
+    tokens of the lowercased text (a column or column name), empty
+    tokens dropped."""
+    return F.filter(F.split(F.lower(text), " "), lambda t: t != F.lit(""))
 
 
-def _gram_expr(toks, n: int):
-    """Distinct token n-grams of a token-array column reference."""
-    grams = F.when(
+def _gram_table(df: DataFrame, text, id_col: str, n: int,
+                hashed: bool = False) -> DataFrame:
+    """(gid, grams): each doc's distinct word n-grams, "_"-joined (a
+    doc shorter than n tokens has one gram of all its tokens).  The
+    tokens get their OWN projection first: an inline split(lower()) in
+    the n-gram lambda would re-evaluate per element (O(len^2)).
+
+    ``hashed`` xxhash64es each gram: 8-byte compares instead of 15-30
+    char string compares in array_intersect, ~3x narrower shuffle/join
+    payloads (verify stage 6.9 -> 2.5 s at 8 cores on the 5x text
+    corpus, same 56,400 pairs).  Jaccard is unchanged unless two
+    DISTINCT grams of one doc pair collide in 64 bits (~|grams|^2 *
+    2^-64 per pair; MinHash already rests on hashed shingles).
+    Bucket-hashing and prefix-ordering callers need the STRINGS."""
+    tokd = df.select(F.col(id_col), _word_tokens(text).alias("__toks"))
+    toks = F.col("__toks")
+    grams = F.array_distinct(F.when(
         F.size(toks) >= n,
         F.transform(
             F.sequence(F.lit(0), F.size(toks) - n),
             lambda i: F.concat_ws("_", *[F.element_at(toks, i + j + 1)
                                          for j in range(n)]),
         ),
-    ).otherwise(F.array(F.concat_ws("_", toks)))
-    return F.array_distinct(grams)
+    ).otherwise(F.array(F.concat_ws("_", toks))))
+    if hashed:
+        grams = F.transform(grams, lambda g: F.xxhash64(g))
+    return tokd.select(F.col(id_col).alias("gid"), grams.alias("grams"))
+
+
+def _pair_grams(cand: DataFrame, grams: DataFrame, a: str,
+                b: str) -> DataFrame:
+    """`cand` plus ga/gb, the grams of its id columns `a` and `b` from a
+    (gid, grams) table.  Grams are the widest payload of every verify
+    plan: ONE semi-join prunes them to candidate ids BEFORE the two
+    fetch joins, so non-candidate docs (most of them at scale) never
+    shuffle their grams.  `cand` is read three times; when it ends in
+    an Exchange (distinct), ReusedExchange computes it once."""
+    ids = (cand.select(F.col(a).alias("gid"))
+           .union(cand.select(F.col(b).alias("gid")))
+           .distinct())
+    g = grams.join(ids, "gid", "left_semi")
+    return (cand.join(g.select(F.col("gid").alias(a),
+                               F.col("grams").alias("ga")), a)
+            .join(g.select(F.col("gid").alias(b),
+                           F.col("grams").alias("gb")), b))
+
+
+def _jaccard(a: str = "ga", b: str = "gb"):
+    """Jaccard of two DISTINCT-element array columns: |union| = |a| +
+    |b| - |inter| with O(1) sizes (stored length), no array_union
+    pass.  Never precompute the sizes in a Project above the gram
+    build: CollapseProject inlines the gram expression into each
+    referencing column and re-runs it per column (measured 4x)."""
+    inter = F.size(F.array_intersect(a, b)).cast("double")
+    return inter / ((F.size(a) + F.size(b)).cast("double") - inter)
 
 
 def jaccard_pairs_exact(df: DataFrame, text_col: str, id_col: str,
@@ -212,29 +252,15 @@ def jaccard_pairs_exact(df: DataFrame, text_col: str, id_col: str,
     borderline pairs).  Quadratic by construction: ONLY for bounded
     subsets (contract checks, recall measurement), never the 100 TB
     path."""
-    tokd = df.select(
-        F.col(id_col),
-        F.filter(F.split(F.lower(F.col(text_col)), " "),
-                 lambda t: t != F.lit("")).alias("__toks"))
-    base = tokd.select(F.col(id_col),
-                       _gram_expr(F.col("__toks"), n).alias("grams"))
+    base = _gram_table(df, text_col, id_col, n)
     pairs = (
         base.alias("a")
-        .join(base.alias("b"), F.col(f"a.{id_col}") < F.col(f"b.{id_col}"))
-        .select(F.col(f"a.{id_col}").alias("id_a"),
-                F.col(f"b.{id_col}").alias("id_b"),
+        .join(base.alias("b"), F.col("a.gid") < F.col("b.gid"))
+        .select(F.col("a.gid").alias("id_a"), F.col("b.gid").alias("id_b"),
                 F.col("a.grams").alias("ga"), F.col("b.grams").alias("gb"))
     )
-    inter = F.size(F.array_intersect("ga", "gb")).cast("double")
-    # distinct grams => |union| = |a| + |b| - |inter|; array size is
-    # O(1) (stored length), so per-PAIR sizes are free and the
-    # array_union pass is gone.  Do NOT precompute sizes in a Project
-    # above the gram build: the optimizer collapses it into the gram
-    # projection and re-evaluates the whole _gram_expr per referencing
-    # column (measured 4x on the text pipeline).
-    union = (F.size("ga") + F.size("gb")).cast("double") - inter
     return (
-        pairs.withColumn("jaccard", F.round(inter / union, 6))
+        pairs.withColumn("jaccard", F.round(_jaccard(), 6))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -246,26 +272,17 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
     """n-gram Jaccard near-dup pairs with an LSH pre-filter: candidate
     pairs come from shared min-hash buckets (cheap, distributed), then
     exact Jaccard over token n-gram sets is computed only within
-    candidates via array_intersect/array_union — never all-pairs."""
-    # tokens hoisted to their own projection: an inline split(lower())
-    # would be re-evaluated per n-gram element (O(len^2) rescans)
-    tokd = _widen(df).select(
-        F.col(id_col),
-        F.filter(F.split(F.lower(F.col(text_col)), " "),
-                 lambda t: t != F.lit("")).alias("__toks"))
-    base = tokd.select(F.col(id_col),
-                       _gram_expr(F.col("__toks"), n).alias("grams"))
-    # Candidates are generated IDS-ONLY: gram arrays are the widest
-    # payload in the plan and must never ride the band explode /
-    # self-join (the pre-r3 form replicated them band_hashes x before
-    # dropDuplicates — at 100x data that multiplies shuffle volume by
-    # the band count).  Same candidate scheme as before (band_hashes
+    candidates — never all-pairs."""
+    base = _gram_table(_widen(df), text_col, id_col, n)
+    # Candidates are generated IDS-ONLY: gram arrays must never ride
+    # the band explode / self-join (the pre-r3 form replicated them
+    # band_hashes x before dropDuplicates — at 100x data that
+    # multiplies shuffle volume by the band count).  band_hashes
     # independent min-hashes over the gram set, so per-pair candidate
-    # probability stays 1-(1-J)^band_hashes); grams are fetched after
-    # the fact by id join, pruned with a semi join to candidate ids
-    # first — the text_near_dup_keepers pattern.
+    # probability is 1-(1-J)^band_hashes; grams are fetched after the
+    # fact (_pair_grams).
     bucketed = base.select(
-        F.col(id_col).alias("__id"),
+        F.col("gid").alias("__id"),
         F.explode(F.array(*[
             F.array_min(F.transform("grams", lambda g, i=i: F.xxhash64(g, F.lit(i))))
             for i in range(band_hashes)
@@ -279,23 +296,9 @@ def ngram_jaccard_pairs(df: DataFrame, text_col: str, id_col: str,
         .select(F.col("a.__id").alias("id_a"), F.col("b.__id").alias("id_b"))
         .distinct()
     )
-    cand_ids = (cand.select(F.col("id_a").alias("gid"))
-                .union(cand.select(F.col("id_b").alias("gid")))
-                .distinct())
-    grams = (base.select(F.col(id_col).alias("gid"), "grams")
-             .join(cand_ids, "gid", "left_semi"))
-    pairs = (
-        cand.join(grams.select(F.col("gid").alias("id_a"),
-                               F.col("grams").alias("ga")), "id_a")
-        .join(grams.select(F.col("gid").alias("id_b"),
-                           F.col("grams").alias("gb")), "id_b")
-    )
-    inter = F.size(F.array_intersect("ga", "gb")).cast("double")
-    # per-pair O(1) sizes; see jaccard_pairs_exact for why sizes must
-    # not be precomputed in a Project above the gram build
-    union = (F.size("ga") + F.size("gb")).cast("double") - inter
     return (
-        pairs.withColumn("jaccard", inter / union)
+        _pair_grams(cand, base, "id_a", "id_b")
+        .withColumn("jaccard", _jaccard())
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
     )
@@ -548,30 +551,6 @@ def connected_components_star(pairs: DataFrame, src: str = "id_a",
                     .alias("component")))
 
 
-def minhash_band_table(df: DataFrame, text_col: str, id_col: str,
-                       num_hashes: int = 16, bands: int = 4,
-                       shingle_k: int = 5) -> DataFrame:
-    """The LSH *index* as a DataFrame: (__id, band, bh) — one row per
-    (doc, band), bh = hash of that band's signature slice.  This is
-    the thing a production deployment PERSISTS (a few dozen bytes per
-    doc) so tomorrow's crawl batch joins against it instead of
-    re-signaturing 10^12 existing docs (see incremental_dedup)."""
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(_widen(df), text_col, id_col,
-                              num_hashes, shingle_k)
-    return sigs.select(
-        F.col(id_col).alias("__id"),
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(*[F.col("sig")[b * rows_per_band + r]
-                             for r in range(rows_per_band)]).alias("bh"),
-            )
-            for b in range(bands)
-        ])).alias("bb"),
-    ).select("__id", "bb.band", "bb.bh")
-
-
 def minhash_candidate_pairs(df: DataFrame, text_col: str, id_col: str,
                             num_hashes: int = 16, bands: int = 4,
                             shingle_k: int = 5) -> DataFrame:
@@ -616,38 +595,11 @@ def text_near_dup_keepers(df: DataFrame, text_col: str, id_col: str,
     df = _widen(df)
     cand = minhash_candidate_pairs(df, text_col, id_col,
                                    num_hashes, bands, shingle_k)
-    tokd = df.select(
-        F.col(id_col),
-        F.filter(F.split(F.lower(F.col(text_col)), " "),
-                 lambda t: t != F.lit("")).alias("__toks"))
     # hashed grams: the verify stage is memory-traffic-bound (the
-    # fetch join materializes both arrays per pair row) — see
-    # _hashed_grams for the measured 2.2-2.6x and the collision
-    # argument
-    grams = tokd.select(F.col(id_col).alias("gid"),
-                        _hashed_grams(_gram_expr(F.col("__toks"), ngram))
-                        .alias("grams"))
-    # gram arrays are the widest payload in this plan: restrict them
-    # to docs that actually appear in a candidate pair BEFORE the
-    # fetch joins, so non-candidate docs (the overwhelming majority
-    # at scale) never push their grams into a shuffle.  `cand` is
-    # referenced three times but ends in an Exchange (distinct), so
-    # Spark's ReusedExchange computes the candidate shuffle once.
-    cand_ids = (cand.select(F.col("id_a").alias("gid"))
-                .union(cand.select(F.col("id_b").alias("gid")))
-                .distinct())
-    grams = grams.join(cand_ids, "gid", "left_semi")
-    pairs = (
-        cand.join(grams.select(F.col("gid").alias("id_a"),
-                               F.col("grams").alias("ga")), "id_a")
-        .join(grams.select(F.col("gid").alias("id_b"),
-                           F.col("grams").alias("gb")), "id_b")
-    )
-    inter = F.size(F.array_intersect("ga", "gb")).cast("double")
-    # per-pair O(1) sizes; see jaccard_pairs_exact for the Project
-    # collapse trap that precomputed sizes trip
-    union = (F.size("ga") + F.size("gb")).cast("double") - inter
-    verified = (pairs.withColumn("jaccard", inter / union)
+    # fetch join materializes both arrays per pair row)
+    grams = _gram_table(df, text_col, id_col, ngram, hashed=True)
+    verified = (_pair_grams(cand, grams, "id_a", "id_b")
+                .withColumn("jaccard", _jaccard())
                 .filter(F.col("jaccard") >= threshold)
                 .select("id_a", "id_b"))
     comp = connected_components_star(verified)
@@ -963,43 +915,19 @@ def crossmodal_near_dups(df: DataFrame, max_hamming: int = 3,
     (drop vs keep-both-captions).
 
     Scale shape: text is only ever compared on pairs the VISUAL index
-    proposes — never all-pairs caption comparison — and the caption
-    gram arrays are computed once, semi-join-pruned to candidate ids
-    before the fetch joins, so non-candidate captions (the
-    overwhelming majority at corpus scale) never enter a shuffle.
-    Pixel bytes never enter the plan at all."""
+    proposes — never all-pairs caption comparison — and only the
+    captions of candidate ids reach a shuffle (_pair_grams).  Pixel
+    bytes never enter the plan at all."""
     cand = phash_near_dups(df.select(id_col, phash_col), max_hamming,
                            id_col, phash_col)
-    tokd = df.select(
-        F.col(id_col),
-        F.filter(
-            F.split(F.lower(F.coalesce(F.col(caption_col), F.lit(""))), " "),
-            lambda t: t != F.lit("")).alias("__toks"))
-    # hashed grams (see _hashed_grams): jaccard VALUES are unchanged
-    # absent 64-bit same-pair collisions, so the rounded output
-    # column still matches the string-gram SQL oracle exactly
-    grams = tokd.select(F.col(id_col).alias("gid"),
-                        _hashed_grams(_gram_expr(F.col("__toks"), ngram))
-                        .alias("grams"))
-    cand_ids = (cand.select(F.col("id_a").alias("gid"))
-                .union(cand.select(F.col("id_b").alias("gid")))
-                .distinct())
-    grams = grams.join(cand_ids, "gid", "left_semi")
-    pairs = (
-        cand.join(grams.select(F.col("gid").alias("id_a"),
-                               F.col("grams").alias("ga")), "id_a")
-        .join(grams.select(F.col("gid").alias("id_b"),
-                           F.col("grams").alias("gb")), "id_b"))
-    inter = F.size(F.array_intersect("ga", "gb")).cast("double")
-    # gram arrays are DISTINCT (_gram_expr), so |union| = |a| + |b|
-    # - |inter| with O(1) per-pair sizes — the per-pair array_union
-    # pass (~the cost of the intersect itself at 2.8M pairs) is gone.
-    # Sizes must NOT be precomputed in a Project above the gram
-    # build: the optimizer collapses it into the gram projection and
-    # re-evaluates _gram_expr per referencing column (measured 4x).
-    union = (F.size("ga") + F.size("gb")).cast("double") - inter
+    # hashed grams: jaccard VALUES are unchanged absent 64-bit
+    # same-pair collisions, so the rounded output column still
+    # matches the string-gram SQL oracle exactly
+    grams = _gram_table(df, F.coalesce(F.col(caption_col), F.lit("")),
+                        id_col, ngram, hashed=True)
     return (
-        pairs.withColumn("jaccard", F.round(inter / union, 6))
+        _pair_grams(cand, grams, "id_a", "id_b")
+        .withColumn("jaccard", F.round(_jaccard(), 6))
         .select(
             "id_a", "id_b",
             F.col("hamming").cast("int").alias("hamming"),
@@ -1039,27 +967,18 @@ def incremental_dedup(batch: DataFrame, corpus: DataFrame,
                             bands, shingle_k)
     cb = minhash_band_table(corpus, text_col, id_col, num_hashes,
                             bands, shingle_k)
-    cross = (bb.alias("n").join(
-        cb.alias("o"), (F.col("n.band") == F.col("o.band"))
-        & (F.col("n.bh") == F.col("o.bh")))
-        .select(F.col("n.__id").alias("bid"),
-                F.col("o.__id").alias("cid")).distinct())
-    within = (bb.alias("a").join(
-        bb.alias("b"), (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.bh") == F.col("b.bh"))
-        & (F.col("a.__id") > F.col("b.__id")))
-        .select(F.col("a.__id").alias("bid"),
-                F.col("b.__id").alias("cid")).distinct())
 
-    def _grams_of(df: DataFrame) -> DataFrame:
-        tokd = _widen(df).select(
-            F.col(id_col),
-            F.filter(F.split(F.lower(F.col(text_col)), " "),
-                     lambda t: t != F.lit("")).alias("__toks"))
-        return tokd.select(F.col(id_col).alias("gid"),
-                           _hashed_grams(_gram_expr(F.col("__toks"), ngram))
-                           .alias("grams"))
+    def _band_hits(other: DataFrame, earlier_only: bool) -> DataFrame:
+        cond = ((F.col("a.band") == F.col("b.band"))
+                & (F.col("a.bh") == F.col("b.bh")))
+        if earlier_only:
+            cond = cond & (F.col("a.__id") > F.col("b.__id"))
+        return (bb.alias("a").join(other.alias("b"), cond)
+                .select(F.col("a.__id").alias("bid"),
+                        F.col("b.__id").alias("cid")).distinct())
 
+    # two gram tables (batch, other), so not _pair_grams: each side is
+    # semi-join-pruned to its own candidate ids before its fetch
     def _verified_min(cand: DataFrame, other_grams: DataFrame,
                       batch_grams: DataFrame) -> DataFrame:
         bg = batch_grams.join(cand.select(F.col("bid").alias("gid"))
@@ -1071,15 +990,22 @@ def incremental_dedup(batch: DataFrame, corpus: DataFrame,
                                  F.col("grams").alias("ga")), "bid")
                  .join(og.select(F.col("gid").alias("cid"),
                                  F.col("grams").alias("gb")), "cid"))
-        inter = F.size(F.array_intersect("ga", "gb")).cast("double")
-        # per-pair O(1) sizes (see jaccard_pairs_exact)
-        union = (F.size("ga") + F.size("gb")).cast("double") - inter
-        return (pairs.filter(inter / union >= threshold)
+        return (pairs.filter(_jaccard() >= threshold)
                 .groupBy("bid").agg(F.min("cid").alias("mid")))
 
-    bgrams = _grams_of(batch)
-    cm = _verified_min(cross, _grams_of(corpus), bgrams)
-    bm = _verified_min(within, bgrams, bgrams)
+    bgrams = _gram_table(_widen(batch), text_col, id_col, ngram, hashed=True)
+    cgrams = _gram_table(_widen(corpus), text_col, id_col, ngram,
+                         hashed=True)
+    cm = _verified_min(_band_hits(cb, earlier_only=False), cgrams, bgrams)
+    bm = _verified_min(_band_hits(bb, earlier_only=True), bgrams, bgrams)
+    return _incremental_status(batch, id_col, cm, bm)
+
+
+def _incremental_status(batch: DataFrame, id_col: str, cm: DataFrame,
+                        bm: DataFrame) -> DataFrame:
+    """(id, status, match_id) per batch row from the two (bid, mid)
+    minimum-match maps of an incremental dedup: corpus matches `cm`
+    take priority over earlier-batch matches `bm`."""
     return (batch.select(F.col(id_col).alias("id"))
             .join(cm.select(F.col("bid").alias("id"),
                             F.col("mid").alias("__cm")), "id", "left")
@@ -1136,17 +1062,7 @@ def incremental_image_dedup(batch: DataFrame, corpus: DataFrame,
 
     cm = _min_match(bb, cb, earlier_only=False)
     bm = _min_match(bb, bb, earlier_only=True)
-    return (batch.select(F.col(id_col).alias("id"))
-            .join(cm.select(F.col("bid").alias("id"),
-                            F.col("mid").alias("__cm")), "id", "left")
-            .join(bm.select(F.col("bid").alias("id"),
-                            F.col("mid").alias("__bm")), "id", "left")
-            .select(
-                "id",
-                F.when(F.col("__cm").isNotNull(), F.lit("dup_of_corpus"))
-                .when(F.col("__bm").isNotNull(), F.lit("dup_in_batch"))
-                .otherwise(F.lit("new")).alias("status"),
-                F.coalesce("__cm", "__bm").alias("match_id")))
+    return _incremental_status(batch, id_col, cm, bm)
 
 
 def containment_pairs(df: DataFrame, text_col: str, id_col: str,
@@ -1187,17 +1103,10 @@ def containment_pairs(df: DataFrame, text_col: str, id_col: str,
     shared by k docs costs its prefix holders k probe rows each —
     bounded by prefix ordering, and a df cap would break the recall
     guarantee, so none is applied."""
-    tokd = _widen(df).select(
-        F.col(id_col),
-        F.filter(F.split(F.lower(F.col(text_col)), " "),
-                 lambda t: t != F.lit("")).alias("__toks"))
-    base = tokd.select(F.col(id_col),
-                       _gram_expr(F.col("__toks"), n).alias("grams")
-                       ).localCheckpoint()
-    ex = base.select(F.col(id_col).alias("gid"),
-                     F.size("grams").alias("sz"),
+    base = _gram_table(_widen(df), text_col, id_col, n).localCheckpoint()
+    ex = base.select("gid", F.size("grams").alias("sz"),
                      F.explode("grams").alias("gram"))
-    # grams are distinct per doc (_gram_expr) => count(*) == doc freq
+    # grams are distinct per doc (_gram_table) => count(*) == doc freq
     dfreq = ex.groupBy("gram").agg(F.count("*").alias("__df"))
     w = Window.partitionBy("gid").orderBy("__df", "gram")
     ranked = (ex.join(dfreq, "gram")
@@ -1214,20 +1123,10 @@ def containment_pairs(df: DataFrame, text_col: str, id_col: str,
                        >= F.ceil(F.lit(threshold) * F.col("__ssz"))))
             .select("src_id", "dst_id")
             .distinct())
-    cand_ids = (cand.select(F.col("src_id").alias("cid"))
-                .union(cand.select(F.col("dst_id").alias("cid")))
-                .distinct())
-    grams = (base.select(F.col(id_col).alias("cid"), "grams")
-             .join(cand_ids, "cid", "left_semi"))
-    pairs = (
-        cand.join(grams.select(F.col("cid").alias("src_id"),
-                               F.col("grams").alias("ga")), "src_id")
-        .join(grams.select(F.col("cid").alias("dst_id"),
-                           F.col("grams").alias("gb")), "dst_id")
-    )
-    inter = F.size(F.array_intersect("ga", "gb")).cast("double")
-    containment = inter / F.size("ga").cast("double")
-    return (pairs.withColumn("containment", containment)
+    containment = (F.size(F.array_intersect("ga", "gb")).cast("double")
+                   / F.size("ga").cast("double"))
+    return (_pair_grams(cand, base, "src_id", "dst_id")
+            .withColumn("containment", containment)
             .filter(F.col("containment") >= threshold)
             .select("src_id", "dst_id",
                     F.round("containment", 6).alias("containment")))

@@ -1,4 +1,4 @@
-"""Rule-hit metrics + F1 aggregations (SURVEY.md §2 O-15..O-18).
+"""Rule-hit metrics and report aggregations (SURVEY.md §2 O-15).
 
 All built-in aggregates (partial aggregation / map-side combine stays
 enabled — grouped-agg pandas UDFs would disable it)."""
@@ -32,39 +32,6 @@ def bucket_metrics(df: DataFrame) -> DataFrame:
     )
     return agg.select(
         "bucket", "n_rows", "n_keep", rule_map.alias("rule_hits"))
-
-
-def f1_vs_labels(pred: DataFrame, labels: DataFrame,
-                 broadcast_labels: bool = True) -> DataFrame:
-    """O-16 + O-19: confusion counts and precision/recall/F1 of the
-    pipeline's keep column vs oracle labels, joined on image_id.
-    Labels are broadcast when they fit (sandbox scale); at cluster
-    scale flip broadcast_labels=False for a sort-merge join."""
-    lab = labels.select("image_id", F.col("keep").alias("keep_true"))
-    if broadcast_labels:
-        lab = F.broadcast(lab)
-    j = pred.select("image_id", "keep").join(lab, "image_id", "inner")
-    c = j.agg(
-        F.sum(((F.col("keep")) & (F.col("keep_true"))).cast("long")).alias("tp"),
-        F.sum(((F.col("keep")) & (~F.col("keep_true"))).cast("long")).alias("fp"),
-        F.sum(((~F.col("keep")) & (F.col("keep_true"))).cast("long")).alias("fn"),
-        F.sum(((~F.col("keep")) & (~F.col("keep_true"))).cast("long")).alias("tn"),
-    )
-    return c.select(
-        "tp", "fp", "fn", "tn",
-        (F.col("tp") / (F.col("tp") + F.col("fp"))).alias("precision"),
-        (F.col("tp") / (F.col("tp") + F.col("fn"))).alias("recall"),
-        (2 * F.col("tp") / (2 * F.col("tp") + F.col("fp") + F.col("fn"))).alias("f1"),
-    )
-
-
-def lang_fmt_rollup(df: DataFrame) -> DataFrame:
-    """O-18: audit report by (lang, fmt) with subtotals."""
-    return (
-        df.rollup("lang", "fmt")
-        .agg(F.count("*").alias("n_rows"),
-             F.sum(F.col("keep").cast("long")).alias("n_keep"))
-    )
 
 
 def funnel(df: DataFrame, steps: list[str], user_col: str = "user_id",

@@ -4,11 +4,13 @@ Images/audio/video are opaque `binary` columns with typed metadata.
 The Spark-side plumbing — schema, Arrow batch shape, mapInPandas
 signature, partitioning discipline (small batches while the payload
 column is in flight) — is real and tested; image decode for the three
-sandbox formats is real (kernels/codecs.py).  Audio/video decode and
-ML feature extractors are STUBBED behind NotImplementedError /
-deterministic fakes because the decode libraries are not in this
-container [ENV]; swap `_fake_embedding` for a real model UDF on a
-cluster.
+sandbox formats is real (kernels/codecs.py).  PCM WAV audio
+(kernels/audio.py, operators/audioquality.py) and the documented RVID
+stand-in video container (kernels/video.py, operators/videoquality.py)
+are implemented end to end; codec audio/video (mp3/ogg/flac,
+mp4/webm) is unsupported, because ffmpeg-class decoders are not
+installed [ENV].  The ML feature extractor is a deterministic fake;
+swap `_fake_embedding` for a real model UDF on a cluster.
 """
 
 from __future__ import annotations
@@ -372,27 +374,6 @@ def expected_near_dup_pairs(sf: float,
     pq.write_table(pa.Table.from_pandas(out, preserve_index=False), tmp)
     os.replace(tmp, path)
     return path
-
-
-def decode_audio_stub(*_args, **_kwargs):
-    raise NotImplementedError(
-        "codec audio (mp3/ogg/flac) requires libsndfile/ffmpeg, "
-        "unavailable in this sandbox.  PCM WAV needs no codec and IS "
-        "implemented end-to-end: kernels/audio.py::decode_wav + "
-        "operators/audioquality.py (decode -> stats -> rules -> "
-        "verdict, value-pinned keys audio_quality_stats / "
-        "agg_audio_quality)")
-
-
-def sample_video_frames_stub(*_args, **_kwargs):
-    raise NotImplementedError(
-        "codec video (mp4/webm) requires ffmpeg, unavailable in this "
-        "sandbox.  The frame-sampling PLUMBING is implemented for the "
-        "documented RVID stand-in container: kernels/video.py + "
-        "operators/videoquality.py (stride sampling -> luminance/"
-        "motion stats -> rules -> verdict, value-pinned keys "
-        "video_frame_stats / agg_video_quality); swap parse_rvid for "
-        "an ffmpeg extractor on a cluster and nothing else changes")
 
 
 def caption_alignment(images: DataFrame,

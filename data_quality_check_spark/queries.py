@@ -1168,7 +1168,7 @@ def q_dedup_minhash_est_error(spark, sf_dir):
     shingle Jaccard from scratch and reads the VALUE-PINNED signature
     fixture (oracle_fixtures.ensure_hash_fixtures), so this key also
     cross-checks the distributed signature aggregate end-to-end."""
-    from .operators.dedup import _shingles_of, minhash_signatures
+    from .operators.dedup import _jaccard, _shingles_of, minhash_signatures
 
     d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 300)
     low = d.select("doc_id", F.lower(F.col("text")).alias("__lt"))
@@ -1179,9 +1179,7 @@ def q_dedup_minhash_est_error(spark, sf_dir):
              .select(F.col("a.doc_id").alias("id_a"),
                      F.col("b.doc_id").alias("id_b"),
                      F.col("a.sh").alias("sa"), F.col("b.sh").alias("sb")))
-    inter = F.size(F.array_intersect("sa", "sb")).cast("double")
-    union = (F.size("sa") + F.size("sb")).cast("double") - inter
-    pairs = (pairs.withColumn("jx", F.round(inter / union, 6))
+    pairs = (pairs.withColumn("jx", F.round(_jaccard("sa", "sb"), 6))
              .filter(F.col("jx") >= 0.3).select("id_a", "id_b", "jx"))
     sigs = minhash_signatures(d, "text", "doc_id")
     j = (pairs
@@ -4045,7 +4043,7 @@ WITH t AS (
   FROM documents
 ), g AS (
   -- short docs contribute NO grams (operators/corpus.py::_word_ngrams
-  -- emits an empty array below n tokens, unlike dedup's _gram_expr)
+  -- emits an empty array below n tokens, unlike dedup's _gram_table)
   SELECT DISTINCT src, unnest(
     CASE WHEN len(toks) >= 3
          THEN list_distinct(list_transform(range(1, len(toks) - 1),

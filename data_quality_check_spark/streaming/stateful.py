@@ -21,7 +21,10 @@ from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from ..operators.dedup import minhash_band_table
 
 DEDUP_OUTPUT_DDL = "image_id string, phash long, is_dup boolean, seen_before int"
 DEDUP_STATE_DDL = "first_id string, n long"
@@ -116,35 +119,19 @@ def streaming_near_dup_candidates(stream: DataFrame,
                                   text_col: str = "text",
                                   id_col: str = "doc_id") -> DataFrame:
     """Streaming analog of the MinHash-LSH candidate stage: each
-    micro-batch's documents are banded with the SAME deterministic
-    one-permutation-hash signatures as the batch operator
-    (operators/dedup.py), and per-(band, band_hash) state remembers
-    the first-ever arrival — a document matching any band seen in ANY
-    earlier micro-batch is flagged a near-dup candidate.
+    micro-batch's (doc, band, band_hash) rows ARE the batch band table
+    (operators/dedup.py::minhash_band_table), and per-(band, band_hash)
+    state remembers the first-ever arrival — a document matching any
+    band seen in ANY earlier micro-batch is flagged a near-dup
+    candidate.
 
     Emits one row per (doc, band).  Downstream either drops docs with
     any is_candidate_dup band (aggressive) or routes candidates to an
     exact-verification batch job (the text_near_dup_keepers flow).
     State is per-band-bucket: sharded by the grouping key like any
     shuffle; RocksDB + timeout TTL bound it in production."""
-    from ..operators.dedup import minhash_signatures
-
-    num_hashes, bands = 16, 4
-    rows_per_band = num_hashes // bands
-    sigs = minhash_signatures(stream, text_col, id_col)
-    from pyspark.sql import functions as F
-    banded = sigs.select(
-        F.col(id_col),
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(b).alias("band"),
-                F.xxhash64(*[F.col("sig")[b * rows_per_band + r]
-                             for r in range(rows_per_band)]).alias("band_hash"),
-            )
-            for b in range(bands)
-        ])).alias("bb"),
-    ).select(id_col, F.col("bb.band").alias("band"),
-             F.col("bb.band_hash").alias("band_hash"))
+    banded = minhash_band_table(stream, text_col, id_col).select(
+        F.col("__id").alias(id_col), "band", F.col("bh").alias("band_hash"))
     return (
         banded.groupBy("band", "band_hash")
         .applyInPandasWithState(

@@ -1,11 +1,9 @@
 """Multimodal plumbing: mapInPandas decode/feature extraction over
-the binary column — real image decode, deterministic fake embedding,
-stubbed audio/video raise cleanly."""
+the binary column — real image decode, deterministic fake embedding."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
 from data_quality_check_spark.kernels import codecs
 from data_quality_check_spark.operators import multimodal as MM
@@ -43,13 +41,6 @@ def test_undecodable_rows_flagged(spark):
     out = MM.extract_features(df).toPandas()
     assert not out.decoded.any()
     assert out.n_bytes.tolist() == [10, 0]
-
-
-def test_stubs_raise():
-    with pytest.raises(NotImplementedError):
-        MM.decode_audio_stub(b"")
-    with pytest.raises(NotImplementedError):
-        MM.sample_video_frames_stub(b"")
 
 
 def test_null_phash_flags_row_not_task(spark):

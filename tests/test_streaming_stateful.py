@@ -64,8 +64,8 @@ def test_cross_batch_dedup(spark, dirs):
 def test_cross_batch_near_dup_candidates(spark, dirs):
     """Streaming MinHash: an exact-dup text arriving in a LATER
     micro-batch must be a candidate in every band, first_id pointing
-    at the first-batch original; signatures match the batch operator
-    bit for bit."""
+    at the first-batch original; the streamed (doc, band, band_hash)
+    rows equal the batch minhash_band_table's."""
     import pandas as pd
 
     from data_quality_check_spark.operators import dedup
@@ -107,11 +107,12 @@ def test_cross_batch_near_dup_candidates(spark, dirs):
     assert (d3.first_id == 1).all()
     assert not res[res.doc_id == 2].is_candidate_dup.any()
     assert not res[res.doc_id == 4].is_candidate_dup.any()
-    # streaming band hashes == batch operator band hashes
+    # streaming band rows == the batch band table's rows on the same docs
     batch = spark.createDataFrame(pd.concat([b1, b2]))
-    sigs = dedup.minhash_signatures(batch, "text", "doc_id").collect()
-    assert {r["doc_id"]: r["sig"] for r in sigs}[1] == \
-           {r["doc_id"]: r["sig"] for r in sigs}[3]
+    bt = dedup.minhash_band_table(batch, "text", "doc_id").collect()
+    assert {(r["__id"], r["band"], r["bh"]) for r in bt} == \
+           {(int(d), int(b), int(h)) for d, b, h in
+            zip(res.doc_id, res.band, res.band_hash)}
 
 
 def test_streaming_dedup_with_ttl_matches_no_timeout(spark, tmp_path):

@@ -2,6 +2,12 @@
 each stage family of text_near_dup_keepers on the 5x-replicated
 corpus, localCheckpoint-materialized boundaries, taskset-confined.
 
+Every stage runs the production helpers of operators/dedup.py.
+`minhash_candidate_pairs` rebuilds its own band table, so
+band_join_distinct is its wall minus the band_table wall.  The
+candidate-id semi-join is part of `_pair_grams`, so it is timed in
+fetch_verify; gram_build_semi times the gram table alone.
+
 Usage: taskset -c 0-7 python tools/decomp_dedup_text.py 8 [runs=2]
 """
 
@@ -29,10 +35,9 @@ def main() -> None:
                       app_name=f"dqc-decomp-text-{cores}")
     spark.sparkContext.setLogLevel("ERROR")
 
-    from data_quality_check_spark.operators import dedup
     from data_quality_check_spark.operators.dedup import (
-        _gram_expr, _hashed_grams, _widen, connected_components_star,
-        minhash_band_table)
+        _gram_table, _jaccard, _pair_grams, connected_components_star,
+        minhash_band_table, minhash_candidate_pairs)
 
     base = spark.read.parquet(f"/root/testdata/sf{sf:g}/documents.parquet")
     docs = (base.crossJoin(spark.range(rep).select(F.col("id").alias("__rep")))
@@ -44,46 +49,23 @@ def main() -> None:
     def one() -> dict:
         t: dict[str, float] = {}
         t0 = time.time()
-        banded = minhash_band_table(docs, "text", "doc_id", 16, 4, 5) \
+        minhash_band_table(docs, "text", "doc_id", 16, 4, 5) \
             .localCheckpoint()
         t["band_table"] = time.time() - t0
 
         t0 = time.time()
-        cand = (banded.alias("a").join(
-            banded.alias("b"),
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bh") == F.col("b.bh"))
-            & (F.col("a.__id") < F.col("b.__id")))
-            .select(F.col("a.__id").alias("id_a"),
-                    F.col("b.__id").alias("id_b"))
-            .distinct().localCheckpoint())
-        t["band_join_distinct"] = time.time() - t0
+        cand = minhash_candidate_pairs(docs, "text", "doc_id", 16, 4, 5) \
+            .localCheckpoint()
+        t["band_join_distinct"] = time.time() - t0 - t["band_table"]
 
         t0 = time.time()
-        tokd = docs.select(
-            F.col("doc_id"),
-            F.filter(F.split(F.lower(F.col("text")), " "),
-                     lambda x: x != F.lit("")).alias("__toks"))
-        grams = tokd.select(F.col("doc_id").alias("gid"),
-                            _hashed_grams(
-                                _gram_expr(F.col("__toks"), ngram))
-                            .alias("grams"))
-        cand_ids = (cand.select(F.col("id_a").alias("gid"))
-                    .union(cand.select(F.col("id_b").alias("gid")))
-                    .distinct())
-        grams = grams.join(cand_ids, "gid", "left_semi").localCheckpoint()
+        grams = _gram_table(docs, "text", "doc_id", ngram, hashed=True) \
+            .localCheckpoint()
         t["gram_build_semi"] = time.time() - t0
 
         t0 = time.time()
-        pairs = (
-            cand.join(grams.select(F.col("gid").alias("id_a"),
-                                   F.col("grams").alias("ga")), "id_a")
-            .join(grams.select(F.col("gid").alias("id_b"),
-                               F.col("grams").alias("gb")), "id_b"))
-        inter = F.size(F.array_intersect("ga", "gb")).cast("double")
-        union = (F.size("ga") + F.size("gb")).cast("double") - inter
-        verified = (pairs.withColumn("jaccard", inter / union)
-                    .filter(F.col("jaccard") >= threshold)
+        verified = (_pair_grams(cand, grams, "id_a", "id_b")
+                    .filter(_jaccard() >= threshold)
                     .select("id_a", "id_b").localCheckpoint())
         t["fetch_verify"] = time.time() - t0
 
