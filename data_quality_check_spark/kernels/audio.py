@@ -40,9 +40,9 @@ def encode_wav(samples: np.ndarray, sr: int) -> bytes:
 
 def decode_wav(blob: bytes) -> tuple[int, np.ndarray]:
     """Strict RIFF/PCM16 parse -> (sample_rate, int16 samples).
-    Raises ValueError on truncation, non-PCM, or non-16-bit data —
-    undecodable rows fail every audio rule, same contract as the
-    image decoder."""
+    Raises ValueError on truncation, non-PCM, non-16-bit data or a
+    zero sample rate — undecodable rows fail every audio rule, same
+    contract as the image decoder."""
     if blob is None or len(blob) < 44 or blob[:4] != b"RIFF" \
             or blob[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE blob")
@@ -66,6 +66,9 @@ def decode_wav(blob: bytes) -> tuple[int, np.ndarray]:
         pos = body + clen + (clen & 1)  # chunks are word-aligned
     if sr is None or data is None:
         raise ValueError("missing fmt/data chunk")
+    if sr == 0:
+        # duration and the fingerprint's slice/band edges divide by sr
+        raise ValueError("zero sample rate")
     if bits != 16 or channels != 1:
         raise ValueError("only mono 16-bit PCM supported")
     if len(data) % 2:

@@ -1,28 +1,20 @@
 """Per-clip audio quality rules — the audio modality's twin of
-operators/imgquality.py, completing the driver instruction's
-multimodal-column contract with a REAL (not stubbed) decode path:
+operators/imgquality.py, with a REAL (not stubbed) decode path:
 PCM-WAV parses from scratch (kernels/audio.py), so the whole
 decode -> statistics -> rules -> verdict chain runs end-to-end
-in-sandbox; only the codec-dependent formats (mp3/ogg — ffmpeg)
-remain honestly stubbed in operators/multimodal.py.
+in-sandbox; only the codec-dependent formats (mp3/ogg — ffmpeg) are
+unsupported.  One fused Arrow UDF over `bytes` runs the kernel; the
+stats batch, rule verdict, report, fixture oracle and fingerprint UDF
+are the shared rule-table engine of operators/statrules.py.
 
-Spark-first split, same as the image side:
-
-* metadata gates (duration floor from stored n_samples/sr) are pure
-  JVM column expressions — no decode, pushdown-friendly;
-* sample statistics need the decoded waveform, so they run in ONE
-  fused Arrow pandas UDF (decode + every statistic in a single
-  ArrowEvalPython stage), sharing kernels/audio.py verbatim with the
-  numpy fixture oracle (parity by construction).
-
-Scale notes (10^12 clips): the UDF projects (bytes, sr) and emits 8
-scalar doubles — the payload dies at the map stage and never crosses
-an Exchange; rules and the verdict are per-row map-side expressions,
-so the operator is shuffle-free and scales with input splits.
+The sample rate comes from the decoded RIFF header — the claimed sr
+and n_samples metadata columns are never consulted (the decoded value
+is authoritative), so they never cross Arrow.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -34,7 +26,6 @@ from pyspark.sql.types import (
     BooleanType,
     DoubleType,
     IntegerType,
-    LongType,
     StructField,
     StructType,
 )
@@ -45,6 +36,16 @@ from ..constants import (
     AUDIO_MIN_DURATION_S,
     AUDIO_SILENCE_FRAC_MAX,
     AUDIO_SILENCE_RMS_DB,
+)
+from ..kernels.audio import audio_fingerprint64, audio_stats, decode_wav
+from .statrules import (
+    expected_fingerprints,
+    expected_rules,
+    fingerprint_udf,
+    fixture,
+    rule_report,
+    stats_batch,
+    with_rules,
 )
 
 AUDIOSTATS_SCHEMA = StructType([
@@ -74,43 +75,14 @@ AUDIO_RULES: list[tuple[str, str, float, str]] = [
 RULE_COLS = [name for name, *_ in AUDIO_RULES]
 
 
-def _stats_batch(blob: pd.Series) -> pd.DataFrame:
-    """Decode + all statistics for one Arrow batch.  Shared by the
-    Spark UDF and the fixture oracle (expected_audioquality).  The
-    sample rate comes from the decoded RIFF header — the claimed sr
-    metadata column is never consulted (decoded value is
-    authoritative, same discipline as n_samples), so it is not in the
-    UDF signature and never crosses Arrow."""
-    from ..kernels.audio import audio_stats, decode_wav
+def _decode(blob) -> tuple[np.ndarray, int]:
+    sr, x = decode_wav(bytes(blob))
+    return x, sr
 
-    n = len(blob)
-    out = {
-        "decoded": np.zeros(n, dtype=bool),
-        "n_samples": np.zeros(n, dtype=np.int32),
-        "duration_s": np.full(n, np.nan),
-        "rms_db": np.full(n, np.nan),
-        "peak_frac": np.full(n, np.nan),
-        "clip_frac": np.full(n, np.nan),
-        "silence_frac": np.full(n, np.nan),
-        "dc_frac": np.full(n, np.nan),
-        "zcr": np.full(n, np.nan),
-        "spectral_centroid_hz": np.full(n, np.nan),
-    }
-    blobs = blob.to_numpy()
-    for i in range(n):
-        b = blobs[i]
-        if b is None:
-            continue
-        try:
-            wav_sr, x = decode_wav(bytes(b))
-        except ValueError:
-            continue
-        st = audio_stats(x, wav_sr)
-        out["decoded"][i] = True
-        out["n_samples"][i] = st["n_samples"]
-        for k in STAT_COLS:
-            out[k][i] = st[k]
-    return pd.DataFrame(out)
+
+def _stats_batch(blob: pd.Series) -> pd.DataFrame:
+    return stats_batch(AUDIOSTATS_SCHEMA, _decode,
+                       lambda d: audio_stats(*d), blob)
 
 
 @pandas_udf(AUDIOSTATS_SCHEMA)
@@ -125,10 +97,8 @@ def audiostats_udf(
 
 
 def with_audio_quality(audio: DataFrame) -> DataFrame:
-    """Attach waveform statistics, per-rule booleans and the audio
-    keep verdict.  Undecodable rows fail every rule; a rule passes
-    only for a DECODED clip inside the threshold (NaN-explicit, the
-    imgquality null discipline)."""
+    """Attach waveform statistics, per-rule booleans and `audio_keep`
+    = decoded AND every rule."""
     # the claimed n_samples metadata column is superseded by the
     # decoded stats struct's field of the same name — drop it with
     # the payload so the output has ONE authoritative n_samples
@@ -136,111 +106,41 @@ def with_audio_quality(audio: DataFrame) -> DataFrame:
         "s", audiostats_udf("bytes")).select(
         *[c for c in audio.columns if c not in ("bytes", "n_samples")],
         "s.*")
-    for name, stat, thr, mode in AUDIO_RULES:
-        cmp = (F.col(stat) >= F.lit(thr)) if mode == "ge" \
-            else (F.col(stat) <= F.lit(thr))
-        st = st.withColumn(
-            name, F.when(F.col("decoded") & ~F.isnan(stat), cmp)
-                   .otherwise(F.lit(False)))
-    keep = F.col("decoded")
-    for name in RULE_COLS:
-        keep = keep & F.col(name)
-    return st.withColumn("audio_keep", keep)
+    return with_rules(st, AUDIO_RULES, "audio_keep")
 
 
 def quality_report(quality: DataFrame) -> DataFrame:
-    """One-row corpus report over a with_audio_quality frame: decode
-    success count, per-rule failure counts, keep count and rate.  One
-    map-side partial-aggregate pass — the UDF already reduced each
-    clip to scalars."""
-    aggs = [F.count("*").alias("n_clips"),
-            F.sum(F.col("decoded").cast("long")).alias("n_decoded")]
-    for c in RULE_COLS:
-        aggs.append(F.sum((~F.col(c)).cast("long"))
-                    .alias(f"bad_{c[:-3]}"))
-    aggs.append(F.sum(F.col("audio_keep").cast("long")).alias("n_keep"))
-    aggs.append(F.round(F.avg(F.col("audio_keep").cast("double")), 6)
-                 .alias("keep_rate"))
-    return quality.agg(*aggs)
+    """One-row corpus report over a with_audio_quality frame."""
+    return rule_report(quality, RULE_COLS, "audio_keep", "n_clips")
 
 
 def expected_audioquality(sf: float,
                           root: str = "/root/repo/data") -> str:
-    """Driver-side numpy oracle for the value pin: run the SAME
-    kernel over the deterministic corpus WITHOUT Spark and write the
-    expected per-clip output as generate-once parquet (the
-    expected_imgquality pattern).  The pin verifies the distributed
-    execution: Arrow round-trips, fused-UDF batching, NaN/NULL rule
-    semantics and the verdict expressions.
+    """Driver-side numpy oracle for the value pin (the
+    expected_imgquality pattern).
 
     Generate-once cache — DELETE data/audioquality_* (and data/
-    audio_*) after touching kernels/audio.py, sources/audio.py or
-    the AUDIO_* constants."""
-    import os
+    audio_*) after touching kernels/audio.py, sources/audio.py, the
+    AUDIO_* constants, this module or operators/statrules.py."""
+    def build() -> pd.DataFrame:
+        from ..sources.audio import generate_pandas
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+        pdf = generate_pandas(sf)
+        return expected_rules(pdf["clip_id"], AUDIOSTATS_SCHEMA,
+                              _stats_batch(pdf["bytes"]), AUDIO_RULES,
+                              "audio_keep")
 
-    from ..sources.audio import generate_pandas
-    from .multimodal import _round6
-
-    path = os.path.join(root, f"audioquality_sf{sf:g}.parquet")
-    if os.path.exists(path):
-        return path
-    os.makedirs(root, exist_ok=True)
-    pdf = generate_pandas(sf)
-    st = _stats_batch(pdf["bytes"])
-
-    out = pd.DataFrame({"clip_id": pdf["clip_id"]})
-    out["decoded"] = st["decoded"].to_numpy()
-    out["n_samples"] = st["n_samples"].to_numpy().astype(np.int32)
-    for k in STAT_COLS:
-        vals = st[k].to_numpy()
-        out[k] = [None if not d or np.isnan(v) else _round6(v)
-                  for d, v in zip(out["decoded"], vals)]
-    dec = out["decoded"].to_numpy()
-    keep = dec.copy()
-    for name, stat, thr, mode in AUDIO_RULES:
-        vals = st[stat].to_numpy()
-        finite = dec & ~np.isnan(vals)
-        ok = np.zeros(len(out), dtype=bool)
-        if mode == "ge":
-            ok[finite] = vals[finite] >= thr
-        else:
-            ok[finite] = vals[finite] <= thr
-        out[name] = ok
-        keep = keep & ok
-    out["audio_keep"] = keep
-
-    tmp = path + ".tmp"
-    pq.write_table(pa.Table.from_pandas(out, preserve_index=False), tmp)
-    os.replace(tmp, path)
-    return path
+    return fixture(os.path.join(root, f"audioquality_sf{sf:g}.parquet"),
+                   build)
 
 
-# NB the return type must be a TYPE OBJECT, not the "long" DDL
-# string: a string is parsed lazily via the active SparkContext, and
-# the PYTHON WORKER re-imports this module with no context -> every
-# OTHER udf in the module dies with SESSION_OR_CONTEXT_NOT_EXISTS
-@pandas_udf(LongType())
-def audiofp_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """bytes -> 64-bit spectral fingerprint (kernels/audio.py::
-    audio_fingerprint64); NULL for undecodable blobs."""
-    from ..kernels.audio import audio_fingerprint64, decode_wav
+def _fingerprint(d: tuple[np.ndarray, int]) -> int:
+    return audio_fingerprint64(*d)
 
-    for blob in it:
-        vals = []
-        for b in blob.to_numpy():
-            if b is None:
-                vals.append(None)
-                continue
-            try:
-                sr, x = decode_wav(bytes(b))
-            except ValueError:
-                vals.append(None)
-                continue
-            vals.append(audio_fingerprint64(x, sr))
-        yield pd.Series(vals, dtype="object").astype("Int64")
+
+# bytes -> 64-bit spectral fingerprint (kernels/audio.py::
+# audio_fingerprint64); NULL for undecodable blobs
+audiofp_udf = fingerprint_udf(_decode, _fingerprint)
 
 
 def audio_fingerprints(audio: DataFrame) -> DataFrame:
@@ -269,31 +169,11 @@ def expected_audiofp(sf: float, root: str = "/root/repo/data") -> str:
     """Numpy fixture oracle for the fingerprint pin: (clip_id, afp)
     for every decodable clip, same kernel, no Spark.  Generate-once
     cache — DELETE data/audiofp_* with the other audio caches."""
-    import os
+    def build():
+        from ..sources.audio import generate_pandas
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+        pdf = generate_pandas(sf)
+        return expected_fingerprints(pdf["clip_id"], pdf["bytes"], "afp",
+                                     _decode, _fingerprint)
 
-    from ..kernels.audio import audio_fingerprint64, decode_wav
-    from ..sources.audio import generate_pandas
-
-    path = os.path.join(root, f"audiofp_sf{sf:g}.parquet")
-    if os.path.exists(path):
-        return path
-    os.makedirs(root, exist_ok=True)
-    pdf = generate_pandas(sf)
-    rows = []
-    for clip_id, blob in zip(pdf["clip_id"], pdf["bytes"]):
-        try:
-            sr, x = decode_wav(bytes(blob))
-        except ValueError:
-            continue
-        rows.append({"clip_id": clip_id,
-                     "afp": audio_fingerprint64(x, sr)})
-    tbl = pa.Table.from_pylist(
-        rows, schema=pa.schema([("clip_id", pa.string()),
-                                ("afp", pa.int64())]))
-    tmp = path + ".tmp"
-    pq.write_table(tbl, tmp)
-    os.replace(tmp, path)
-    return path
+    return fixture(os.path.join(root, f"audiofp_sf{sf:g}.parquet"), build)

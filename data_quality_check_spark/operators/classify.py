@@ -50,6 +50,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..functions import rules as R
+
 QUANTUM = 1_000_000.0  # micro-log units
 
 
@@ -83,11 +85,9 @@ def nb_langid(docs: DataFrame, id_col: str = "doc_id",
     the V x L count table; the score pass is a broadcast join + one
     doc-keyed aggregation.  See the module docstring for the 10^12
     shape."""
-    toks_expr = F.filter(F.split(F.col(text_col), " "),
-                         lambda t: t != F.lit(""))
     base = docs.select(F.col(id_col).alias("id"),
                        F.col(label_col).alias("label"),
-                       toks_expr.alias("__toks"))
+                       R.tokens(F.col(text_col)).alias("__toks"))
     tok = base.select("id", "label", F.explode("__toks").alias("tok"))
     if hash_buckets > 0:
         tok = tok.withColumn("tok", _bucket(F.col("tok"), hash_buckets)

@@ -27,12 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import rules as R
 from .dedup import _widen
-
-
-def _toks(text_col: str):
-    """Whitespace tokens of a single-space-separated text column."""
-    return F.filter(F.split(F.col(text_col), " "), lambda t: t != F.lit(""))
 
 
 def _word_ngrams(tokens_col: str, n: int):
@@ -61,7 +57,7 @@ def doc_grams(df: DataFrame, text_col: str = "text",
     return (_widen(df)  # 1-task single-file scans serialize the
             # interpreted HOF gram stage on one core (dedup._widen)
             .select(F.col(id_col).alias(id_col),
-                    _toks(text_col).alias("__w"))
+                    R.tokens(F.col(text_col)).alias("__w"))
             .select(id_col, F.array_distinct(
                 _word_ngrams("__w", n)).alias("grams")))
 
@@ -180,7 +176,7 @@ def pack_token_bins(df: DataFrame, group_col: str, id_col: str,
     capacity) — the contiguous-packing approximation used by training
     pipelines (docs may straddle a boundary; the tokenizer splits
     there).  One window shuffle on the group key, nothing else."""
-    n_tok = F.size(_toks(text_col))
+    n_tok = F.size(R.tokens(F.col(text_col)))
     w = (Window.partitionBy(group_col).orderBy(F.col(id_col).asc())
          .rowsBetween(Window.unboundedPreceding, -1))
     cum_before = F.coalesce(F.sum("n_tokens").over(w), F.lit(0))
@@ -215,7 +211,7 @@ def repetition_signals(df: DataFrame, text_col: str = "text",
     per row from sorted token / bigram arrays — no explode, no
     shuffle (see module docstring)."""
     base = (df
-            .select(id_col, _toks(text_col).alias("__w"))
+            .select(id_col, R.tokens(F.col(text_col)).alias("__w"))
             .select(id_col, "__w", _word_ngrams("__w", 2).alias("__b"))
             .select(id_col,
                     F.size("__w").alias("n_words"),
@@ -254,7 +250,7 @@ def dup_spans(df: DataFrame, text_col: str = "text",
     duplicated dictionary comes back as a LEFT SEMI join, so only
     (id, pos) int pairs reach the per-doc window + aggregate."""
     toks = _widen(df).select(F.col(id_col).alias("id"),
-                             _toks(text_col).alias("__toks"))
+                             R.tokens(F.col(text_col)).alias("__toks"))
     base = (toks.select("id", F.size("__toks").cast("long")
                         .alias("n_tokens"))
             .filter(F.col("n_tokens") >= n)
@@ -377,7 +373,7 @@ def chunk_documents(df: DataFrame, text_col: str = "text",
         raise ValueError("overlap must be < chunk_tokens")
     step = chunk_tokens - overlap
     toks = (df.select(F.col(id_col).alias("id"),
-                      _toks(text_col).alias("__toks"))
+                      R.tokens(F.col(text_col)).alias("__toks"))
             .select("id", "__toks", F.size("__toks").alias("__n"))
             .filter(F.col("__n") >= 1))
     # m = 1 for n <= chunk, else floor((n - chunk + step - 1)/step) + 1
@@ -417,7 +413,7 @@ def zipf_slope(df: DataFrame, text_col: str = "text",
     row_number window only ever ranks `top_k` rows.  Ties broken by
     word for a deterministic cross-engine rank."""
     words = (_widen(df)
-             .select(_toks(text_col).alias("__w"))
+             .select(R.tokens(F.col(text_col)).alias("__w"))
              .select(F.explode("__w").alias("w")))
     wc = words.groupBy("w").agg(F.count("*").alias("c"))
     vocab = wc.agg(F.count("*").alias("vocab"))
@@ -493,7 +489,7 @@ def boilerplate_fraction(df: DataFrame, text_col: str = "text",
     the exchanges (64-bit keys, ~1e-10 collision odds at 10^9 distinct
     grams) — same plan shape, 10x narrower shuffle rows."""
     toks = df.select(F.col(id_col).alias("id"),
-                     _toks(text_col).alias("__toks"))
+                     R.tokens(F.col(text_col)).alias("__toks"))
     grams = (toks.select("id", F.explode(
         F.array_distinct(_word_ngrams("__toks", n))).alias("gram")))
     dfreq = grams.groupBy("gram").agg(
@@ -523,7 +519,7 @@ def word_entropy(df: DataFrame, text_col: str = "text",
     no shuffle) — this declarative twin exists for the oracle and
     for ad-hoc SQL users."""
     toks = df.select(F.col(id_col).alias("id"),
-                     _toks(text_col).alias("__toks"))
+                     R.tokens(F.col(text_col)).alias("__toks"))
     words = toks.select("id", F.explode("__toks").alias("w"))
     wc = words.groupBy("id", "w").agg(F.count("*").alias("c"))
     return (wc.groupBy("id").agg(
@@ -549,7 +545,7 @@ def source_overlap(df: DataFrame, text_col: str = "text",
     signatures (operators/dedup.py::minhash_signatures) — same
     output schema, sketch-sized state."""
     toks = df.select(F.col(source_col).alias("src"),
-                     _toks(text_col).alias("__toks"))
+                     R.tokens(F.col(text_col)).alias("__toks"))
     g = (toks.select("src", F.explode(
         F.array_distinct(_word_ngrams("__toks", n))).alias("gram"))
          .distinct())
@@ -799,7 +795,7 @@ def dsir_select(df: DataFrame, target_col: str, k: int,
     b = float(DSIR_BUCKETS)
     toks = _widen(df).select(
         F.col(id_col), F.col(target_col).alias("__tgt"),
-        _toks(text_col).alias("__toks"))
+        R.tokens(F.col(text_col)).alias("__toks"))
     gb = (toks.select(
         F.col(id_col), F.col("__tgt"),
         F.explode(F.concat(F.col("__toks"), _word_ngrams("__toks", 2)))
@@ -866,7 +862,7 @@ def bigram_nll_score(df: DataFrame, text_col: str = "text",
     map-side so the reducer state is one long per key.  V (distinct
     vocab) is a 1-row broadcast."""
     toks = _widen(df).select(F.col(id_col),
-                             _toks(text_col).alias("__toks"))
+                             R.tokens(F.col(text_col)).alias("__toks"))
     bi = (toks.select(
         F.col(id_col),
         F.explode(_word_ngrams("__toks", 2)).alias("__bg"))

@@ -8,6 +8,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..functions import rules as R
+
 _I64_MIN = "-9223372036854775807 - 1"  # min long; the bare literal
 # does not parse as int64 in either engine (unary minus binds after
 # the out-of-range positive literal)
@@ -185,7 +187,7 @@ def _word_tokens(text):
     """The one word tokenizer of the text operators: whitespace
     tokens of the lowercased text (a column or column name), empty
     tokens dropped."""
-    return F.filter(F.split(F.lower(text), " "), lambda t: t != F.lit(""))
+    return R.tokens(F.lower(text))
 
 
 def _gram_table(df: DataFrame, text, id_col: str, n: int,

@@ -1,40 +1,26 @@
 """Visual RISK scoring (LAION-style watermark / NSFW / aesthetic
 gates) over the decoded image, complementing the pixel QUALITY rules
-in operators/imgquality.py.
-
-Same Spark-first architecture as imgquality: the decoded-pixel
-statistics run in ONE fused Arrow pandas UDF (decode + every risk
-statistic in a single ArrowEvalPython stage) sharing
-kernels/imgrisk.py verbatim with the driver-side numpy oracle, and
-every rule + the final verdict are JVM column expressions computed
-from the FULL-precision stats.
+in operators/imgquality.py: one fused Arrow UDF over (bytes, fmt, w,
+h) runs kernels/imgrisk.py, and the rule verdict, report and fixture
+oracle are the shared rule-table engine of operators/statrules.py.
 
 The watermark / NSFW detectors are honest region-statistic stand-ins
 for trained classifiers (which are [ENV]-unavailable — see the
 kernels/imgrisk.py docstring for provenance); what this operator
-makes real and tested is the Spark side a production scorer needs:
-the fused single-decode UDF stage, scalar-only outputs across the
-Exchange, threshold rules as codegen expressions, and the corpus
-report as a map-side partial aggregate.
-
-Scale notes (10^12 rows): the UDF projects only (bytes, fmt, w, h)
-and emits 4 scalar doubles — `bytes` dies at the map stage; rules and
-the verdict are per-row expressions, so the per-image key is
-shuffle-free and the report shuffles one pre-aggregated row per
-partition.  On a cluster you would fuse this kernel into the
-imgquality UDF (one decode for both rule families); the sandbox keeps
-them separate so each verdict stays independently value-pinned
-(same separation rationale as queries.py::q_keep_decision_full).
+makes real and tested is the Spark side a production scorer needs.
+On a cluster you would fuse this kernel into the imgquality UDF (one
+decode for both rule families); the sandbox keeps them separate so
+each verdict stays independently value-pinned (same separation
+rationale as queries.py::q_keep_decision_full).
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
-import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.types import BooleanType, DoubleType, StructField, StructType
 
@@ -43,6 +29,15 @@ from ..constants import (
     IMG_SKIN_MAX,
     IMG_WM_CORNER_MAX,
     IMG_WM_STRIP_MAX,
+)
+from ..kernels.imgrisk import risk_stats
+from .imgquality import decode_image
+from .statrules import (
+    expected_rules,
+    fixture,
+    rule_report,
+    stats_batch,
+    with_rules,
 )
 
 IMGRISK_SCHEMA = StructType([
@@ -55,7 +50,6 @@ IMGRISK_SCHEMA = StructType([
 
 # (rule name, stat column, threshold, keep-iff) — single source for
 # the Spark expressions, the numpy oracle and the tests.
-# "le": stat <= thr keeps; "ge": stat >= thr keeps.
 RISK_RULES: list[tuple[str, str, float, str]] = [
     ("wm_strip_ok", "wm_strip_frac", IMG_WM_STRIP_MAX, "le"),
     ("wm_corner_ok", "wm_corner_frac", IMG_WM_CORNER_MAX, "le"),
@@ -67,37 +61,9 @@ RISK_RULE_COLS = [name for name, *_ in RISK_RULES]
 
 def _risk_batch(blob: pd.Series, fmt: pd.Series, w: pd.Series,
                 h: pd.Series) -> pd.DataFrame:
-    """Decode + all risk statistics for one Arrow batch.  Shared by
-    the Spark UDF and the fixture oracle (expected_imgrisk)."""
-    from ..kernels import codecs
-    from ..kernels.imgrisk import risk_stats
-
-    n = len(blob)
-    out = {
-        "decoded": np.zeros(n, dtype=bool),
-        "wm_strip_frac": np.full(n, np.nan),
-        "wm_corner_frac": np.full(n, np.nan),
-        "skin_frac": np.full(n, np.nan),
-        "aesthetic": np.full(n, np.nan),
-    }
-    blobs = blob.to_numpy()
-    fmts = fmt.to_numpy()
-    ws = w.to_numpy()
-    hs = h.to_numpy()
-    for i in range(n):
-        b = blobs[i]
-        if b is None:
-            continue
-        try:
-            pix = codecs.decode(b, fmts[i], int(ws[i]), int(hs[i]))
-        except Exception:
-            continue
-        st = risk_stats(pix)
-        out["decoded"][i] = True
-        for k in ("wm_strip_frac", "wm_corner_frac", "skin_frac",
-                  "aesthetic"):
-            out[k][i] = st[k]
-    return pd.DataFrame(out)
+    """Decode + all risk statistics for one Arrow batch."""
+    return stats_batch(IMGRISK_SCHEMA, decode_image, risk_stats,
+                       blob, fmt, w, h)
 
 
 @pandas_udf(IMGRISK_SCHEMA)
@@ -111,89 +77,34 @@ def imgrisk_udf(
 
 
 def with_image_risk(images: DataFrame) -> DataFrame:
-    """Attach risk statistics, per-rule booleans and the risk verdict.
-    A rule passes only for a DECODED image inside the threshold (NaN
-    stats fail explicitly, same null semantics as imgquality);
-    `risk_keep` = decoded AND every rule."""
+    """Attach risk statistics, per-rule booleans and `risk_keep` =
+    decoded AND every rule."""
     st = images.withColumn(
         "s", imgrisk_udf("bytes", "fmt", "w", "h")).select(
         *[c for c in images.columns if c != "bytes"], "s.*")
-
-    for name, stat, thr, mode in RISK_RULES:
-        cmp = (F.col(stat) >= F.lit(thr)) if mode == "ge" \
-            else (F.col(stat) <= F.lit(thr))
-        st = st.withColumn(
-            name, F.when(F.col("decoded") & ~F.isnan(stat), cmp)
-                   .otherwise(F.lit(False)))
-    keep = F.col("decoded")
-    for name in RISK_RULE_COLS:
-        keep = keep & F.col(name)
-    return st.withColumn("risk_keep", keep)
+    return with_rules(st, RISK_RULES, "risk_keep")
 
 
 def risk_report(risk: DataFrame) -> DataFrame:
     """One-row corpus risk report: decode count, per-rule flag counts
-    and the risk keep rate.  One map-side partial-aggregate pass (the
-    UDF already reduced each image to scalars)."""
-    aggs = [F.count("*").alias("n_images"),
-            F.sum(F.col("decoded").cast("long")).alias("n_decoded")]
-    for c in RISK_RULE_COLS:
-        aggs.append(F.sum((~F.col(c)).cast("long")).alias(f"bad_{c[:-3]}"))
-    aggs.append(F.sum(F.col("risk_keep").cast("long")).alias("n_keep"))
-    aggs.append(F.round(F.avg(F.col("risk_keep").cast("double")), 6)
-                 .alias("keep_rate"))
-    return risk.agg(*aggs)
+    and the risk keep rate."""
+    return rule_report(risk, RISK_RULE_COLS, "risk_keep", "n_images")
 
 
 def expected_imgrisk(sf: float, root: str = "/root/repo/data") -> str:
-    """Driver-side numpy oracle for the value pin: run the SAME kernel
-    over the deterministic corpus WITHOUT Spark and write the expected
-    per-image output as generate-once parquet (the imgquality
-    expected_imgquality pattern).  The pin verifies the distributed
-    execution: Arrow round-trips, fused-UDF batching, NaN/null rule
-    semantics and the verdict expressions.
+    """Driver-side numpy oracle for the value pin (the
+    expected_imgquality pattern).
 
     Generate-once cache — DELETE data/imgrisk_* after touching
     kernels/imgrisk.py, kernels/imgstats.py, kernels/codecs.py,
-    sources/images.py, or the IMG_* risk constants."""
-    import os
+    sources/images.py, the IMG_* risk constants, this module or
+    operators/statrules.py."""
+    def build() -> pd.DataFrame:
+        from ..sources.images import generate_pandas
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+        pdf = generate_pandas(sf)
+        st = _risk_batch(pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"])
+        return expected_rules(pdf["image_id"], IMGRISK_SCHEMA, st,
+                              RISK_RULES, "risk_keep")
 
-    path = os.path.join(root, f"imgrisk_sf{sf:g}.parquet")
-    if os.path.exists(path):
-        return path
-
-    from ..sources.images import generate_pandas
-    from .multimodal import _round6
-
-    os.makedirs(root, exist_ok=True)
-    pdf = generate_pandas(sf)
-    st = _risk_batch(pdf["bytes"], pdf["fmt"], pdf["w"], pdf["h"])
-
-    out = pd.DataFrame({"image_id": pdf["image_id"]})
-    out["decoded"] = st["decoded"].to_numpy()
-    dec = out["decoded"].to_numpy()
-    for k in ("wm_strip_frac", "wm_corner_frac", "skin_frac",
-              "aesthetic"):
-        vals = st[k].to_numpy()
-        out[k] = [None if not d or np.isnan(v) else _round6(v)
-                  for d, v in zip(dec, vals)]
-    keep = dec.copy()
-    for name, stat, thr, mode in RISK_RULES:
-        vals = st[stat].to_numpy()
-        finite = dec & ~np.isnan(vals)
-        ok = np.zeros(len(out), dtype=bool)
-        if mode == "ge":
-            ok[finite] = vals[finite] >= thr
-        else:
-            ok[finite] = vals[finite] <= thr
-        out[name] = ok
-        keep = keep & ok
-    out["risk_keep"] = keep
-
-    tmp = path + ".tmp"
-    pq.write_table(pa.Table.from_pandas(out, preserve_index=False), tmp)
-    os.replace(tmp, path)
-    return path
+    return fixture(os.path.join(root, f"imgrisk_sf{sf:g}.parquet"), build)

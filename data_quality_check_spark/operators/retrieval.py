@@ -19,6 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from .dedup import _word_tokens
+
 BM25_K1 = 1.2
 BM25_B = 0.75
 
@@ -44,8 +46,7 @@ def bm25_topk(docs: DataFrame, queries: list[tuple[str, list[str]]],
 
     toks = docs.select(
         F.col(id_col),
-        F.explode(F.filter(F.split(F.lower(F.col(text_col)), " "),
-                           lambda t: t != F.lit(""))).alias("term"))
+        F.explode(_word_tokens(F.col(text_col))).alias("term"))
     tf = toks.groupBy(id_col, "term").agg(F.count("*").alias("tf"))
     dl = toks.groupBy(id_col).agg(F.count("*").alias("dl"))
     dft = tf.groupBy("term").agg(F.count("*").alias("df"))

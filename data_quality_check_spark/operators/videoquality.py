@@ -1,19 +1,22 @@
 """Per-video frame-sampling quality rules — completes the
-image/audio/video multimodal triplet (driver instruction).  The
-container is the documented RVID stand-in (kernels/video.py: ffmpeg
-is unavailable, so the payload is deterministic-fake while the
-PLUMBING — fused Arrow UDF, stride frame sampling, statistics,
-rules, fixture oracle — is the real production shape; swap the
-parser for an ffmpeg extractor and nothing else changes).
+image/audio/video multimodal triplet.  The container is the
+documented RVID stand-in (kernels/video.py: ffmpeg is unavailable, so
+the payload is deterministic-fake while the PLUMBING — fused Arrow
+UDF, stride frame sampling, statistics, rules, fixture oracle — is
+the real production shape; swap the parser for an ffmpeg extractor
+and nothing else changes).  The stats batch, rule verdict, report,
+fixture oracle and fingerprint UDF are the shared rule-table engine
+of operators/statrules.py.
 
-Rules: duration floor, minimum frame count, motion floor (drops
-STATIC clips — the re-encoded thumbnail loops a web crawl is full
-of), near-black ceiling.  Scale shape identical to audio/imgquality:
-(bytes, fps) in, scalars out, payload dies at the map stage.
+Rules: duration floor, motion floor (drops STATIC clips — the
+re-encoded thumbnail loops a web crawl is full of), near-black
+ceiling and a minimum decoded frame count.  fps and n_frames come
+from the decoded RVID header, never the claimed metadata columns.
 """
 
 from __future__ import annotations
 
+import os
 from collections.abc import Iterator
 
 import numpy as np
@@ -25,7 +28,6 @@ from pyspark.sql.types import (
     BooleanType,
     DoubleType,
     IntegerType,
-    LongType,
     StructField,
     StructType,
 )
@@ -36,6 +38,16 @@ from ..constants import (
     VIDEO_MIN_FRAMES,
     VIDEO_MOTION_MIN,
     VIDEO_SAMPLE_FRAMES,
+)
+from ..kernels.video import parse_rvid, video_fingerprint64, video_stats
+from .statrules import (
+    expected_fingerprints,
+    expected_rules,
+    fingerprint_udf,
+    fixture,
+    rule_report,
+    stats_batch,
+    with_rules,
 )
 
 VIDEOSTATS_SCHEMA = StructType([
@@ -54,41 +66,19 @@ VIDEO_RULES: list[tuple[str, str, float, str]] = [
     ("duration_ok", "duration_s", VIDEO_MIN_DURATION_S, "ge"),
     ("motion_ok", "motion", VIDEO_MOTION_MIN, "ge"),
     ("black_ok", "black_frac", VIDEO_BLACK_FRAC_MAX, "le"),
+    ("frames_ok", "n_frames", VIDEO_MIN_FRAMES, "ge"),
 ]
 RULE_COLS = [name for name, *_ in VIDEO_RULES]
 
 
-def _stats_batch(blob: pd.Series) -> pd.DataFrame:
-    # fps comes from the decoded RVID header (decoded value is
-    # authoritative, audio's sr discipline) — the claimed fps metadata
-    # column is not in the signature and never crosses Arrow
-    from ..kernels.video import parse_rvid, video_stats
+def _decode(blob) -> tuple[np.ndarray, int]:
+    fps, frames = parse_rvid(bytes(blob))
+    return frames, fps
 
-    n = len(blob)
-    out = {
-        "decoded": np.zeros(n, dtype=bool),
-        "n_frames": np.zeros(n, dtype=np.int32),
-        "duration_s": np.full(n, np.nan),
-        "lum_mean": np.full(n, np.nan),
-        "lum_std": np.full(n, np.nan),
-        "motion": np.full(n, np.nan),
-        "black_frac": np.full(n, np.nan),
-    }
-    blobs = blob.to_numpy()
-    for i in range(n):
-        b = blobs[i]
-        if b is None:
-            continue
-        try:
-            vid_fps, frames = parse_rvid(bytes(b))
-        except ValueError:
-            continue
-        st = video_stats(frames, vid_fps, VIDEO_SAMPLE_FRAMES)
-        out["decoded"][i] = True
-        out["n_frames"][i] = st["n_frames"]
-        for k in STAT_COLS:
-            out[k][i] = st[k]
-    return pd.DataFrame(out)
+
+def _stats_batch(blob: pd.Series) -> pd.DataFrame:
+    return stats_batch(VIDEOSTATS_SCHEMA, _decode,
+                       lambda d: video_stats(*d, VIDEO_SAMPLE_FRAMES), blob)
 
 
 @pandas_udf(VIDEOSTATS_SCHEMA)
@@ -102,112 +92,45 @@ def videostats_udf(
 
 
 def with_video_quality(video: DataFrame) -> DataFrame:
-    """Statistics + per-rule booleans + verdict; the claimed
+    """Statistics + per-rule booleans + `video_keep`; the claimed
     n_frames metadata is superseded by the decoded count (audio's
-    n_samples discipline); the frame-count floor is a plain integer
-    gate on the decoded value."""
+    n_samples discipline)."""
     st = video.withColumn(
         "s", videostats_udf("bytes")).select(
         *[c for c in video.columns if c not in ("bytes", "n_frames")],
         "s.*")
-    for name, stat, thr, mode in VIDEO_RULES:
-        cmp = (F.col(stat) >= F.lit(thr)) if mode == "ge" \
-            else (F.col(stat) <= F.lit(thr))
-        st = st.withColumn(
-            name, F.when(F.col("decoded") & ~F.isnan(stat), cmp)
-                   .otherwise(F.lit(False)))
-    st = st.withColumn(
-        "frames_ok", F.col("decoded")
-        & (F.col("n_frames") >= F.lit(VIDEO_MIN_FRAMES)))
-    keep = F.col("decoded") & F.col("frames_ok")
-    for name in RULE_COLS:
-        keep = keep & F.col(name)
-    return st.withColumn("video_keep", keep)
+    return with_rules(st, VIDEO_RULES, "video_keep")
 
 
 def quality_report(quality: DataFrame) -> DataFrame:
-    aggs = [F.count("*").alias("n_videos"),
-            F.sum(F.col("decoded").cast("long")).alias("n_decoded")]
-    for c in [*RULE_COLS, "frames_ok"]:
-        aggs.append(F.sum((~F.col(c)).cast("long"))
-                    .alias(f"bad_{c[:-3]}"))
-    aggs.append(F.sum(F.col("video_keep").cast("long")).alias("n_keep"))
-    aggs.append(F.round(F.avg(F.col("video_keep").cast("double")), 6)
-                 .alias("keep_rate"))
-    return quality.agg(*aggs)
+    return rule_report(quality, RULE_COLS, "video_keep", "n_videos")
 
 
 def expected_videoquality(sf: float,
                           root: str = "/root/repo/data") -> str:
-    """Numpy fixture oracle (the expected_audioquality pattern).
+    """Numpy fixture oracle (the expected_imgquality pattern).
     Generate-once cache — DELETE data/videoquality_* (and
-    data/video_*) after touching kernels/video.py, sources/video.py
-    or the VIDEO_* constants."""
-    import os
+    data/video_*) after touching kernels/video.py, sources/video.py,
+    the VIDEO_* constants, this module or operators/statrules.py."""
+    def build() -> pd.DataFrame:
+        from ..sources.video import generate_pandas
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+        pdf = generate_pandas(sf)
+        return expected_rules(pdf["video_id"], VIDEOSTATS_SCHEMA,
+                              _stats_batch(pdf["bytes"]), VIDEO_RULES,
+                              "video_keep")
 
-    from ..sources.video import generate_pandas
-    from .multimodal import _round6
-
-    path = os.path.join(root, f"videoquality_sf{sf:g}.parquet")
-    if os.path.exists(path):
-        return path
-    os.makedirs(root, exist_ok=True)
-    pdf = generate_pandas(sf)
-    st = _stats_batch(pdf["bytes"])
-
-    out = pd.DataFrame({"video_id": pdf["video_id"]})
-    out["decoded"] = st["decoded"].to_numpy()
-    out["n_frames"] = st["n_frames"].to_numpy().astype(np.int32)
-    for k in STAT_COLS:
-        vals = st[k].to_numpy()
-        out[k] = [None if not d or np.isnan(v) else _round6(v)
-                  for d, v in zip(out["decoded"], vals)]
-    dec = out["decoded"].to_numpy()
-    keep = dec.copy()
-    for name, stat, thr, mode in VIDEO_RULES:
-        vals = st[stat].to_numpy()
-        finite = dec & ~np.isnan(vals)
-        ok = np.zeros(len(out), dtype=bool)
-        if mode == "ge":
-            ok[finite] = vals[finite] >= thr
-        else:
-            ok[finite] = vals[finite] <= thr
-        out[name] = ok
-        keep = keep & ok
-    out["frames_ok"] = dec & (out["n_frames"].to_numpy()
-                              >= VIDEO_MIN_FRAMES)
-    out["video_keep"] = keep & out["frames_ok"].to_numpy()
-
-    tmp = path + ".tmp"
-    pq.write_table(pa.Table.from_pandas(out, preserve_index=False), tmp)
-    os.replace(tmp, path)
-    return path
+    return fixture(os.path.join(root, f"videoquality_sf{sf:g}.parquet"),
+                   build)
 
 
-@pandas_udf(LongType())
-def videofp_udf(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-    """bytes -> 64-bit video fingerprint (majority-vote frame ahash,
-    kernels/video.py); NULL for undecodable blobs.  Type OBJECT in
-    the decorator, never the DDL string (worker-side import has no
-    SparkContext — the audiofp lesson)."""
-    from ..kernels.video import parse_rvid, video_fingerprint64
+def _fingerprint(d: tuple[np.ndarray, int]) -> int:
+    return video_fingerprint64(d[0], VIDEO_SAMPLE_FRAMES)
 
-    for blob in it:
-        vals = []
-        for b in blob.to_numpy():
-            if b is None:
-                vals.append(None)
-                continue
-            try:
-                _fps, frames = parse_rvid(bytes(b))
-            except ValueError:
-                vals.append(None)
-                continue
-            vals.append(video_fingerprint64(frames, VIDEO_SAMPLE_FRAMES))
-        yield pd.Series(vals, dtype="object").astype("Int64")
+
+# bytes -> 64-bit video fingerprint (majority-vote frame ahash,
+# kernels/video.py); NULL for undecodable blobs
+videofp_udf = fingerprint_udf(_decode, _fingerprint)
 
 
 def video_fingerprints(video: DataFrame) -> DataFrame:
@@ -232,32 +155,11 @@ def video_fingerprint_dups(video: DataFrame,
 def expected_videofp(sf: float, root: str = "/root/repo/data") -> str:
     """Numpy fixture oracle for the fingerprint pin.  Generate-once
     cache — DELETE data/videofp_* with the other video caches."""
-    import os
+    def build():
+        from ..sources.video import generate_pandas
 
-    import pyarrow as pa
-    import pyarrow.parquet as pq
+        pdf = generate_pandas(sf)
+        return expected_fingerprints(pdf["video_id"], pdf["bytes"], "vfp",
+                                     _decode, _fingerprint)
 
-    from ..kernels.video import parse_rvid, video_fingerprint64
-    from ..sources.video import generate_pandas
-
-    path = os.path.join(root, f"videofp_sf{sf:g}.parquet")
-    if os.path.exists(path):
-        return path
-    os.makedirs(root, exist_ok=True)
-    pdf = generate_pandas(sf)
-    rows = []
-    for video_id, blob in zip(pdf["video_id"], pdf["bytes"]):
-        try:
-            _fps, frames = parse_rvid(bytes(blob))
-        except ValueError:
-            continue
-        rows.append({"video_id": video_id,
-                     "vfp": video_fingerprint64(frames,
-                                                VIDEO_SAMPLE_FRAMES)})
-    tbl = pa.Table.from_pylist(
-        rows, schema=pa.schema([("video_id", pa.string()),
-                                ("vfp", pa.int64())]))
-    tmp = path + ".tmp"
-    pq.write_table(tbl, tmp)
-    os.replace(tmp, path)
-    return path
+    return fixture(os.path.join(root, f"videofp_sf{sf:g}.parquet"), build)

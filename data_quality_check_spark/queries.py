@@ -32,6 +32,7 @@ from .constants import (
     STOPWORD_MIN_TOKENS,
     STOPWORDS,
 )
+from .functions import rules as R
 from .functions.udfs import pipeline_udf, text_verdict
 from .operators import dedup, metrics, salt
 from .plans import pipeline
@@ -58,18 +59,13 @@ def _images(spark: SparkSession, sf_dir: str) -> DataFrame:
 _EN_STOPS = STOPWORDS["en"]
 _EN_STOPS_SQL = "[" + ", ".join(f"'{w}'" for w in _EN_STOPS) + "]"
 
-# document text tokens (single-space separated fixture text)
-def _doc_tokens():
-    return F.filter(F.split(F.col("text"), " "), lambda t: t != F.lit(""))
-
-
 def _distinct_ratio():
-    toks = _doc_tokens()
+    toks = R.tokens(F.col("text"))
     return F.size(F.array_distinct(toks)).cast("double") / F.size(toks)
 
 
 def _stop_ratio():
-    toks = _doc_tokens()
+    toks = R.tokens(F.col("text"))
     stops = F.array(*[F.lit(w) for w in _EN_STOPS])
     return (F.size(F.filter(toks, lambda t: F.array_contains(stops, t)))
             .cast("double") / F.size(toks))
@@ -2065,7 +2061,7 @@ FROM scored WHERE cos >= 0.25
 
 def q_text_tokens(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    toks = _doc_tokens()
+    toks = R.tokens(F.col("text"))
     bpe_ish = F.regexp_extract_all("text", F.lit("[a-z]+|[0-9]+|[^a-z0-9 ]"), 0)
     return d.select(
         "doc_id",
@@ -2286,7 +2282,7 @@ def q_text_tfidf_topk(spark, sf_dir):
     corpus shuffles counts, never token instances."""
     d = _t(spark, sf_dir, "documents")
     toks = d.select(
-        "source", F.explode(_doc_tokens()).alias("tok"))
+        "source", F.explode(R.tokens(F.col("text"))).alias("tok"))
     tf = toks.groupBy("source", "tok").agg(F.count("*").alias("tf"))
     # n_sources as a broadcast 1-row frame: stays lazy (no driver
     # action at plan-build time), one tiny aggregate in the job
@@ -2401,7 +2397,7 @@ def q_corpus_stats(spark, sf_dir):
     corpus size; every statistic is algebraic or a fixed-size sketch,
     so the same job runs unchanged at 10^12 rows."""
     d = _t(spark, sf_dir, "documents")
-    toks = _doc_tokens()
+    toks = R.tokens(F.col("text"))
     score = (0.4 * F.least(F.lit(1.0), F.length("text") / F.lit(200.0))
              + 0.3 * _stop_ratio() + 0.3 * _distinct_ratio())
     base = d.select(
@@ -2529,7 +2525,7 @@ def q_text_langid_heuristic(spark, sf_dir):
     from .constants import LANGS
 
     d = _t(spark, sf_dir, "documents")
-    tokd = d.select("doc_id", _doc_tokens().alias("__toks"))
+    tokd = d.select("doc_id", R.tokens(F.col("text")).alias("__toks"))
 
     def _vote(words):
         # NB: a two-arg lambda would be read as (element, index) by
@@ -3990,7 +3986,7 @@ def q_corpus_token_budget(spark, sf_dir):
     from .operators.corpus import token_budget_plan
 
     d = _t(spark, sf_dir, "documents")
-    return token_budget_plan(d, "source", F.size(_doc_tokens()), 50000)
+    return token_budget_plan(d, "source", F.size(R.tokens(F.col("text"))), 50000)
 
 
 SQL_CORPUS_TOKEN_BUDGET = """
@@ -4756,7 +4752,6 @@ def q_agg_bucket_rule_hits(spark, sf_dir):
     SQL-expressible rule (null guard, length, repetition, stopword,
     symbol, duplicate).  The model rules (langid/ppl/toxic/pixel) stay
     in the rows-only agg_bucket_metrics."""
-    from .functions import rules as R
     from .operators.salt import with_bucket
 
     im = with_bucket(_images(spark, sf_dir).select(
@@ -5941,19 +5936,14 @@ def q_image_quality_stats(spark, sf_dir):
     NaN stats (undecoded / too small for a Laplacian interior) become
     NULL so both engines hash the same bytes."""
     from .operators.imgquality import with_image_quality
+    from .operators.statrules import rounded
 
     out = with_image_quality(_images(spark, sf_dir))
-
-    def _r6(c: str):
-        col = F.col(c)
-        return F.round(F.when(F.isnan(col), None).otherwise(col), 6) \
-                .alias(c)
-
     return out.select(
         "image_id", "decoded", "n_px",
-        *[_r6(c) for c in ("entropy_bits", "contrast_rms", "blur_var",
-                           "flat_frac", "dark_frac", "bright_frac",
-                           "colorfulness", "sat_mean")],
+        *[rounded(c) for c in ("entropy_bits", "contrast_rms",
+                               "blur_var", "flat_frac", "dark_frac",
+                               "bright_frac", "colorfulness", "sat_mean")],
         "res_ok", "aspect_ok", "entropy_ok", "contrast_ok", "blur_ok",
         "flat_ok", "dark_ok", "bright_ok", "color_ok", "visual_keep",
     )
@@ -5975,17 +5965,12 @@ def q_audio_quality_stats(spark, sf_dir):
     NULL so both engines hash the same bytes."""
     from .operators.audioquality import (
         RULE_COLS as AR, STAT_COLS as AS_, with_audio_quality)
+    from .operators.statrules import rounded
     from .sources.audio import read_audio
 
     out = with_audio_quality(read_audio(spark, 0.01))
-
-    def _r6(c: str):
-        col = F.col(c)
-        return F.round(F.when(F.isnan(col), None).otherwise(col), 6) \
-                .alias(c)
-
     return out.select("clip_id", "decoded", "n_samples",
-                      *[_r6(c) for c in AS_], *AR, "audio_keep")
+                      *[rounded(c) for c in AS_], *AR, "audio_keep")
 
 
 SQL_AUDIO_QUALITY_STATS = (
@@ -6026,20 +6011,14 @@ def q_video_frame_stats(spark, sf_dir):
     stand-in container (operators/videoquality.py — real plumbing,
     deterministic payload; swap the parser for ffmpeg on a cluster).
     VALUE-CHECKED against the numpy fixture oracle."""
+    from .operators.statrules import rounded
     from .operators.videoquality import (
         RULE_COLS as VR, STAT_COLS as VS, with_video_quality)
     from .sources.video import read_video
 
     out = with_video_quality(read_video(spark, 0.01))
-
-    def _r6(c: str):
-        col = F.col(c)
-        return F.round(F.when(F.isnan(col), None).otherwise(col), 6) \
-                .alias(c)
-
     return out.select("video_id", "decoded", "n_frames",
-                      *[_r6(c) for c in VS], *VR, "frames_ok",
-                      "video_keep")
+                      *[rounded(c) for c in VS], *VR, "video_keep")
 
 
 SQL_VIDEO_FRAME_STATS = (
@@ -6200,18 +6179,13 @@ def q_image_risk_stats(spark, sf_dir):
     booleans are computed from FULL-precision stats on both sides;
     the rounded stat columns are for the value hash."""
     from .operators.imgscore import with_image_risk
+    from .operators.statrules import rounded
 
     out = with_image_risk(_images(spark, sf_dir))
-
-    def _r6(c: str):
-        col = F.col(c)
-        return F.round(F.when(F.isnan(col), None).otherwise(col), 6) \
-                .alias(c)
-
     return out.select(
         "image_id", "decoded",
-        *[_r6(c) for c in ("wm_strip_frac", "wm_corner_frac",
-                           "skin_frac", "aesthetic")],
+        *[rounded(c) for c in ("wm_strip_frac", "wm_corner_frac",
+                               "skin_frac", "aesthetic")],
         "wm_strip_ok", "wm_corner_ok", "skin_ok", "aesthetic_ok",
         "risk_keep",
     )

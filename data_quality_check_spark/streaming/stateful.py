@@ -125,13 +125,15 @@ def streaming_near_dup_candidates(stream: DataFrame,
     band seen in ANY earlier micro-batch is flagged a near-dup
     candidate.
 
-    Emits one row per (doc, band).  Downstream either drops docs with
-    any is_candidate_dup band (aggressive) or routes candidates to an
-    exact-verification batch job (the text_near_dup_keepers flow).
+    Emits one row per (doc, band); the input id column is `id_col`
+    (a long) and the output id column is always `doc_id`.
+    Downstream either drops docs with any is_candidate_dup band
+    (aggressive) or routes candidates to an exact-verification batch
+    job (the text_near_dup_keepers flow).
     State is per-band-bucket: sharded by the grouping key like any
     shuffle; RocksDB + timeout TTL bound it in production."""
     banded = minhash_band_table(stream, text_col, id_col).select(
-        F.col("__id").alias(id_col), "band", F.col("bh").alias("band_hash"))
+        F.col("__id").alias("doc_id"), "band", F.col("bh").alias("band_hash"))
     return (
         banded.groupBy("band", "band_hash")
         .applyInPandasWithState(

@@ -117,6 +117,26 @@ def test_batch_composition_invariance(spark):
             assert (x == y).all(), c
 
 
+def test_zero_sample_rate_is_undecoded(spark):
+    """A WAV header with sample rate 0 is a malformed blob: its row is
+    undecoded and dropped and its fingerprint is NULL — it must not
+    fail the task (duration and the fingerprint divide by sr)."""
+    from data_quality_check_spark.operators.audioquality import (
+        audio_fingerprints, quality_report, with_audio_quality)
+
+    x = (8000 * np.sin(np.arange(8000) / 5.0)).astype(np.int16)
+    df = spark.createDataFrame(
+        [("good", encode_wav(x, 8000)), ("sr0", encode_wav(x, 0))],
+        "clip_id string, bytes binary")
+    out = with_audio_quality(df).toPandas().set_index("clip_id")
+    assert out.loc["good", "decoded"] and not out.loc["sr0", "decoded"]
+    assert not out.loc["sr0", "audio_keep"]
+    rep = quality_report(with_audio_quality(df)).collect()[0]
+    assert (rep["n_clips"], rep["n_decoded"]) == (2, 1)
+    fps = audio_fingerprints(df).toPandas()
+    assert fps["clip_id"].tolist() == ["good"]
+
+
 def test_audio_plan_shape(spark):
     """One fused ArrowEvalPython stage; bytes never on an Exchange."""
     from data_quality_check_spark.queries import REGISTRY

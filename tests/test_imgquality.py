@@ -87,6 +87,25 @@ def test_tiny_image_has_no_laplacian():
     assert st["n_px"] == 10
 
 
+def test_decoded_image_without_laplacian_fails_blur_rule(spark):
+    """A decodable 5x2 image has no Laplacian interior: its NaN
+    blur_var crosses Arrow as NULL, and blur_ok must still read False
+    (not NULL), so the report counts it and every rule stays boolean."""
+    from data_quality_check_spark.kernels import codecs
+    from data_quality_check_spark.operators.imgquality import (
+        quality_report, with_image_quality)
+
+    pix = _rgb(np.tile(np.arange(5) * 50, (2, 1)))
+    df = spark.createDataFrame(
+        [("tiny", codecs.encode(pix, "ppm"), "ppm", 5, 2)],
+        "image_id string, bytes binary, fmt string, w int, h int")
+    q = with_image_quality(df)
+    row = q.collect()[0]
+    assert row["decoded"] and row["blur_var"] is None
+    assert row["blur_ok"] is False and row["visual_keep"] is False
+    assert quality_report(q).collect()[0]["bad_blur"] == 1
+
+
 def test_gray_luma_is_exact_integer_bt601():
     pix = np.array([[[255, 0, 0], [0, 255, 0], [0, 0, 255],
                      [255, 255, 255]]], dtype=np.uint8)

@@ -115,6 +115,43 @@ def test_cross_batch_near_dup_candidates(spark, dirs):
             zip(res.doc_id, res.band, res.band_hash)}
 
 
+def test_near_dup_candidates_custom_id_col(spark, dirs):
+    """id_col names the INPUT id column; the output id column is
+    always doc_id (the state function's output schema)."""
+    from data_quality_check_spark.streaming.stateful import (
+        streaming_near_dup_candidates)
+
+    ind, outd = dirs
+    base = ("a photo of the old stone bridge over the quiet river at "
+            "sunset with a small boat passing underneath")
+    batches = ({"id": [1, 2], "text": [base, "coffee market in winter"]},
+               {"id": [3], "text": [base]})
+    for i, b in enumerate(batches):
+        path = os.path.join(ind, f"docs{i}.parquet")
+        pq.write_table(pa.Table.from_pydict(
+            b, schema=pa.schema([("id", pa.int64()), ("text", pa.string())])),
+            path)
+        # the file source orders files by mtime: make the arrival order
+        # explicit instead of relying on the clock's resolution
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
+
+    stream = (spark.readStream.schema("id long, text string")
+              .option("maxFilesPerTrigger", 1).parquet(ind))
+    q = (streaming_near_dup_candidates(stream, id_col="id")
+         .writeStream.format("parquet")
+         .option("path", os.path.join(outd, "res"))
+         .option("checkpointLocation", os.path.join(outd, "ckpt"))
+         .trigger(availableNow=True).start())
+    assert q.awaitTermination(180)
+    assert q.exception() is None
+
+    res = spark.read.parquet(os.path.join(outd, "res")).toPandas()
+    assert sorted(set(res.doc_id)) == [1, 2, 3]
+    d3 = res[res.doc_id == 3]
+    assert len(d3) == 4 and d3.is_candidate_dup.all()
+    assert (d3.first_id == 1).all()
+
+
 def test_streaming_dedup_with_ttl_matches_no_timeout(spark, tmp_path):
     """With a TTL far longer than the run, eviction never fires and
     output is identical to the NoTimeout operator."""

@@ -90,7 +90,7 @@ def test_fixture_matches_spark(spark, tmp_path):
         "video_id", "decoded", "n_frames",
         *[F.round(F.when(F.isnan(c), None).otherwise(F.col(c)), 6)
           .alias(c) for c in STAT_COLS],
-        *RULE_COLS, "frames_ok", "video_keep").toPandas()
+        *RULE_COLS, "video_keep").toPandas()
     fix = fix.sort_values("video_id").reset_index(drop=True)
     got = got.sort_values("video_id").reset_index(drop=True)
     assert list(fix.columns) == list(got.columns)
