@@ -288,18 +288,12 @@ def split_contamination(train: DataFrame, eval_df: DataFrame,
     contaminated pairs you care about; cost is one fused
     multiply-add pass per (train, eval) pair, the same budget as one
     epoch of a linear probe."""
-    from .similarity import _dot, _dvec, _norm
+    from .similarity import _prenormed, _score_pairs
 
-    t = train.select(F.col(id_col).alias("train_id"),
-                     _dvec(F.col(vec_col)).alias("tv"))
-    t = t.select("train_id", "tv", _norm(F.col("tv")).alias("__tn"))
-    e = eval_df.select(F.col(id_col).alias("eval_id"),
-                       _dvec(F.col(vec_col)).alias("ev"))
-    e = e.select("eval_id", "ev", _norm(F.col("ev")).alias("__en"))
-    scored = (t.crossJoin(F.broadcast(e))
-              .withColumn("cos", F.round(
-                  _dot(F.col("tv"), F.col("ev"))
-                  / (F.col("__tn") * F.col("__en")), 6)))
+    t = _prenormed(train, id_col, vec_col, "train_id", "tv", "__tn")
+    e = _prenormed(eval_df, id_col, vec_col, "eval_id", "ev", "__en")
+    scored = _score_pairs(t.crossJoin(F.broadcast(e)),
+                          "tv", "ev", "__tn", "__en")
     hits = scored.filter(F.col("cos") >= threshold)
     agg = hits.groupBy("eval_id").agg(
         F.count("*").alias("n_contaminating"),

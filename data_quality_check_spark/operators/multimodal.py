@@ -345,7 +345,7 @@ def expected_near_dup_pairs(sf: float,
         sig = np.zeros(n, dtype=np.int64)
         for b in range(bits):
             # elementwise double multiply then sequential fold — the
-            # same ops as zip_with(x*r) + aggregate in _lsh_signature
+            # same ops as similarity._plane_dots (zip_with + aggregate)
             sig += np.where(seqsum(C * planes[b]) > 0.0, 1 << b, 0)
         order = np.argsort(sig, kind="stable")
         svals = sig[order]

@@ -16,10 +16,11 @@ P * k rows per query after the two-phase rank.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .dedup import _word_tokens
+from .topk import rank_topk
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -77,8 +78,6 @@ def bm25_topk(docs: DataFrame, queries: list[tuple[str, list[str]]],
                .agg((F.sum(F.round(F.col("__s") * 1e6).cast("long"))
                      / 1e6).alias("score"),
                     F.count("*").alias("n_terms_hit")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("score"), F.asc(id_col))
-    return (per_doc.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
+    return (rank_topk(per_doc, "query_id", k, F.desc("score"),
+                      F.asc(id_col))
             .select("query_id", id_col, "score", "n_terms_hit", "rk"))

@@ -3,67 +3,77 @@ ops): brute-force cosine top-k baseline + LSH-bucketed scale path.
 
 Dot products run JVM-side via higher-order array functions
 (zip_with + aggregate, sequential double accumulation — deterministic
-order), no Python in the hot path.  The query side is broadcast (the
+order), no Python in the hot path.  They are written as SQL text: a
+Python lambda or `F.col` costs the driver a dozen py4j round trips,
+a plane of 64 literals thousands.  The query side is broadcast (the
 query set is small by construction); the corpus is never collected.
 
-Scale path: random-hyperplane LSH signs computed from xxhash64-seeded
-pseudo-random projections bucket the corpus once (shuffle on a small
-int key); candidates are only scored within matching buckets —
+Scale path: signs of projections onto seeded Gaussian hyperplanes
+(plan literals) bucket the corpus once (shuffle on a small int key);
+candidates are only scored within matching buckets —
 at 10^12 rows the brute-force cross product is replaced by
 |corpus|/2^bits work per query.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
 from .dedup import _widen
+from .topk import rank_topk
 
 
-def _dvec(col):
-    return F.transform(col, lambda x: x.cast("double"))
+def _dvec(col: str) -> str:
+    """SQL: the array column `col` cast element-wise to double."""
+    return f"transform(`{col}`, x -> cast(x as double))"
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, v: acc + v)
+def _dot(a: str, b: str) -> str:
+    """SQL: <a, b> of two double arrays, one sequential fold."""
+    return (f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), 0D, "
+            "(acc, s) -> acc + s)")
 
 
-def _norm(a):
-    return F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
+def _sumsq(a: str) -> str:
+    return f"aggregate({a}, 0D, (acc, s) -> acc + s * s)"
 
 
-def with_cosine(joined: DataFrame, qcol: str, ccol: str) -> DataFrame:
-    """cos rounded to 6 decimals BEFORE ranking: makes top-k ordering
-    reproducible across engines/accumulation orders (ties broken by
-    neighbor_id)."""
-    qa, ca = _dvec(F.col(qcol)), _dvec(F.col(ccol))
-    return joined.withColumn(
-        "cos", F.round(_dot(qa, ca) / (_norm(qa) * _norm(ca)), 6))
+def _norm(a: str) -> str:
+    return f"sqrt({_sumsq(a)})"
 
 
 def _prenormed(df: DataFrame, id_col: str, vec_col: str,
-               id_alias: str, vec_alias: str, norm_alias: str) -> DataFrame:
-    """(id, double-vector, norm) projected ONCE per vector.  Scoring a
-    candidate pair is then a single zip_with/aggregate pass; the r1
-    `with_cosine`-on-raw-columns form re-derived both casts and both
-    norms PER PAIR — higher-order functions are interpreted (no
-    codegen), so that multiplied the dominant per-pair cost ~5x.
-    Values are bit-identical: same expressions, hoisted per-vector."""
-    return (df.select(F.col(id_col).alias(id_alias),
-                      _dvec(F.col(vec_col)).alias(vec_alias))
-            .select(id_alias, vec_alias,
-                    _norm(F.col(vec_alias)).alias(norm_alias)))
+               id_alias: str, vec_alias: str, norm_alias: str,
+               *carry) -> DataFrame:
+    """(id, *carry, double-vector, norm) projected ONCE per vector —
+    the one such projection; `carry` columns (a label, a cluster) ride
+    along as SQL text ("`label` AS __ql").  Scoring a candidate pair
+    is then a single zip_with/aggregate pass; the r1 form re-derived
+    both casts and both norms PER PAIR — higher-order functions are
+    interpreted (no codegen), so that multiplied the dominant per-pair
+    cost ~5x.  Values are bit-identical: same expressions, hoisted
+    per-vector."""
+    return (df.selectExpr(f"`{id_col}` AS {id_alias}", *carry,
+                          f"{_dvec(vec_col)} AS {vec_alias}")
+            .selectExpr("*", f"{_norm(vec_alias)} AS {norm_alias}"))
 
 
 def _score_pairs(joined: DataFrame, acol: str, bcol: str,
                  anorm: str, bnorm: str) -> DataFrame:
-    """Cosine over prenormed sides; rounding as in with_cosine."""
-    return joined.withColumn(
-        "cos", F.round(_dot(F.col(acol), F.col(bcol))
-                       / (F.col(anorm) * F.col(bnorm)), 6))
+    """Cosine over prenormed sides, rounded to 6 decimals BEFORE
+    ranking: top-k order is then reproducible across engines and
+    accumulation orders (ties broken by id)."""
+    return joined.withColumn("cos", F.expr(
+        f"round({_dot(acol, bcol)} / ({anorm} * {bnorm}), 6)"))
+
+
+def _cosine_rank(joined: DataFrame, k: int) -> DataFrame:
+    """Each query's top k prenormed (qvec, cvec) pairs by cos."""
+    scored = _score_pairs(joined, "qvec", "cvec", "__qn", "__cn")
+    return (rank_topk(scored, "query_id", k, F.desc("cos"),
+                      F.asc("neighbor_id"))
+            .select("query_id", "neighbor_id", "cos", "rk"))
 
 
 def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -72,15 +82,8 @@ def cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     q = _prenormed(queries, id_col, vec_col, "query_id", "qvec", "__qn")
     c = _prenormed(_widen(corpus), id_col, vec_col,
                    "neighbor_id", "cvec", "__cn")
-    joined = c.crossJoin(F.broadcast(q)).filter(
-        F.col("neighbor_id") != F.col("query_id"))
-    scored = _score_pairs(joined, "qvec", "cvec", "__qn", "__cn")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos", "rk")
-    )
+    return _cosine_rank(c.crossJoin(F.broadcast(q)).filter(
+        "neighbor_id != query_id"), k)
 
 
 def _hyperplanes(dim: int, bits: int, seed: int = 0):
@@ -95,19 +98,15 @@ def _hyperplanes(dim: int, bits: int, seed: int = 0):
     return rng.standard_normal((bits, dim))
 
 
-def _lsh_signature(vec_col, planes):
-    """Sign-of-projection signature: bit b = <v, planes[b]> > 0."""
-    sig = F.lit(0)
-    for b in range(len(planes)):
-        proj = F.aggregate(
-            F.zip_with(
-                _dvec(vec_col),
-                F.array(*[F.lit(float(x)) for x in planes[b]]),
-                lambda x, r: x * r,
-            ),
-            F.lit(0.0), lambda acc, v: acc + v)
-        sig = sig + F.when(proj > 0, F.lit(1 << b)).otherwise(F.lit(0))
-    return sig
+def _plane_dots(vec_col: str, planes) -> list[str]:
+    """SQL: <v, p> for each literal plane p — the one plane-dot
+    builder (LSH signatures, IVF cells).  repr() of a double is its
+    shortest exact round trip, so the literals are the ones F.lit
+    would give (tests/test_similarity.py checks the signatures
+    against a numpy fold)."""
+    return [_dot(_dvec(vec_col),
+                 f"array({', '.join(f'{float(x)!r}D' for x in p)})")
+            for p in planes]
 
 
 def ivf_centroids(df: DataFrame, n_centroids: int = 16, iters: int = 5,
@@ -140,21 +139,15 @@ def _with_centroid_cell(df: DataFrame, vec_col: str, C) -> DataFrame:
     nested when-chain over the raw dot expressions would duplicate
     them exponentially and explode codegen."""
     k = len(C)
-    dots = [
-        F.aggregate(
-            F.zip_with(_dvec(F.col(vec_col)),
-                       F.array(*[F.lit(float(x)) for x in C[c]]),
-                       lambda a, b: a * b),
-            F.lit(0.0), lambda acc, v: acc + v).alias(f"__d{c}")
-        for c in range(k)
-    ]
-    with_dots = df.select("*", *dots)
-    best_dot = F.greatest(*[F.col(f"__d{c}") for c in range(k)])
-    cell = F.lit(k - 1)
+    dots = [F.expr(f"{d} AS __d{c}")
+            for c, d in enumerate(_plane_dots(vec_col, C))]
+    best = f"greatest({', '.join(f'__d{c}' for c in range(k))})"
+    cell = str(k - 1)
     for c in range(k - 2, -1, -1):  # first matching centroid wins ties
-        cell = F.when(F.col(f"__d{c}") == best_dot, F.lit(c)).otherwise(cell)
-    return with_dots.withColumn("cell", cell.cast("int")).drop(
-        *[f"__d{c}" for c in range(k)])
+        cell = f"CASE WHEN __d{c} = {best} THEN {c} ELSE {cell} END"
+    return (df.select("*", *dots)
+            .withColumn("cell", F.expr(f"CAST({cell} AS INT)"))
+            .drop(*[f"__d{c}" for c in range(k)]))
 
 
 def ivf_cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -182,41 +175,44 @@ def ivf_cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     spark = corpus.sparkSession
     q = spark.createDataFrame(
         probe, f"query_id long, cell int, qvec array<double>")
-    q = q.select("query_id", "cell", "qvec",
-                 _norm(F.col("qvec")).alias("__qn"))
-
-    joined = c_assigned.join(F.broadcast(q), "cell").filter(
-        F.col("neighbor_id") != F.col("query_id"))
-    scored = _score_pairs(joined, "qvec", "cvec", "__qn", "__cn")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos", "rk")
-    )
+    q = q.selectExpr("*", f"{_norm('qvec')} AS __qn")
+    return _cosine_rank(c_assigned.join(F.broadcast(q), "cell").filter(
+        "neighbor_id != query_id"), k)
 
 
-def _banded_sigs(df: DataFrame, id_alias: str, vec_alias: str,
-                 dim: int, bits: int, bands: int,
-                 id_col: str, vec_col: str) -> DataFrame:
-    """(id, vec, band, sig): one row per band, signature from that
-    band's own hyperplane family.  OR-construction: two vectors are
-    candidates if ANY band matches — recall 1-(1-p^bits)^bands for
-    per-bit agreement p, while a random pair only collides in
-    ~bands/2^bits of the table."""
-    return df.select(
-        F.col(id_col).alias(id_alias),
-        F.col(vec_col).alias(vec_alias),
-        F.explode(F.array(*[
-            F.struct(
-                F.lit(t).alias("band"),
-                _lsh_signature(F.col(vec_col),
-                               _hyperplanes(dim, bits, seed=t)).alias("sig"),
-            )
-            for t in range(bands)
-        ])).alias("bs"),
-    ).select(id_alias, vec_alias,
-             F.col("bs.band").alias("band"), F.col("bs.sig").alias("sig"))
+def _banded_sigs(df: DataFrame, id_alias: str, dim: int, bits: int,
+                 bands: int, id_col: str, vec_col: str) -> DataFrame:
+    """(id, band, sig): one row per band; sig bit b is
+    <v, plane_b> > 0 over that band's own hyperplane family.
+    OR-construction: two vectors are candidates if ANY band matches —
+    recall 1-(1-p^bits)^bands for per-bit agreement p, while a random
+    pair only collides in ~bands/2^bits of the table."""
+    structs = []
+    for t in range(bands):
+        sig = " + ".join(
+            ["0"] + [f"CASE WHEN {d} > 0 THEN {1 << b} ELSE 0 END"
+                     for b, d in enumerate(_plane_dots(
+                         vec_col, _hyperplanes(dim, bits, seed=t)))])
+        structs.append(f"struct({t} AS band, {sig} AS sig)")
+    return (df.selectExpr(f"`{id_col}` AS {id_alias}",
+                          f"explode(array({', '.join(structs)})) AS bs")
+            .select(id_alias, "bs.band", "bs.sig"))
+
+
+def _lsh_candidates(corpus: DataFrame, queries: DataFrame, dim: int,
+                    bits: int, tables: int, id_col: str,
+                    vec_col: str) -> DataFrame:
+    """Distinct (query_id, neighbor_id) pairs sharing a signature in
+    ANY of `tables` hyperplane families.  Only ids travel the band
+    join (the query side broadcasts), and a pair colliding in m bands
+    is deduped BEFORE scoring — the r1 shape scored it m times."""
+    c = _banded_sigs(corpus, "neighbor_id", dim, bits, tables, id_col,
+                     vec_col)
+    q = _banded_sigs(queries, "query_id", dim, bits, tables, id_col,
+                     vec_col)
+    return (c.join(F.broadcast(q), ["band", "sig"])
+            .filter("neighbor_id != query_id")
+            .select("query_id", "neighbor_id").distinct())
 
 
 def embedding_near_dups(df: DataFrame, threshold: float = 0.25,
@@ -264,21 +260,17 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.25,
             # hoist the per-vector mean into its own projected column
             # BEFORE the transform lambda (HOF bodies re-evaluate
             # referenced expressions per element)
-            mu = (F.aggregate(vec_col, F.lit(0.0),
-                              lambda acc, x: acc + x.cast("double"))
-                  / F.size(vec_col))
-            lsh_src = (df.select(id_col, vec_col, mu.alias("__mu"))
-                       .select(id_col, vec_col, F.transform(
-                           vec_col,
-                           lambda x: x.cast("double") - F.col("__mu"))
-                           .alias("__cvec")))
+            i, v = f"`{id_col}`", f"`{vec_col}`"
+            mu = (f"aggregate({v}, 0D, (acc, x) -> acc + cast(x as double))"
+                  f" / size({v})")
+            lsh_src = (df.selectExpr(i, v, f"{mu} AS __mu").selectExpr(
+                i, v, f"transform({v}, x -> cast(x as double) - __mu) "
+                "AS __cvec"))
             lsh_col = "__cvec"
-        a = _banded_sigs(lsh_src, "id_a", "va", dim, bits, bands,
-                         id_col, lsh_col).drop("va")
-        b = _banded_sigs(lsh_src, "id_b", "vb", dim, bits, bands,
-                         id_col, lsh_col).drop("vb")
+        a = _banded_sigs(lsh_src, "id_a", dim, bits, bands, id_col, lsh_col)
+        b = _banded_sigs(lsh_src, "id_b", dim, bits, bands, id_col, lsh_col)
         cand = (a.join(b, ["band", "sig"])
-                .filter(F.col("id_a") < F.col("id_b"))
+                .filter("id_a < id_b")
                 .select("id_a", "id_b").distinct())
         joined = (
             cand.join(_prenormed(df, id_col, vec_col,
@@ -291,7 +283,7 @@ def embedding_near_dups(df: DataFrame, threshold: float = 0.25,
                 .select("id_a", "id_b", "cos"))
     a = _prenormed(df, id_col, vec_col, "id_a", "va", "__na")
     b = _prenormed(df, id_col, vec_col, "id_b", "vb", "__nb")
-    joined = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
+    joined = a.crossJoin(b).filter("id_a < id_b")
     scored = _score_pairs(joined, "va", "vb", "__na", "__nb")
     return (scored.filter(F.col("cos") >= threshold)
             .select("id_a", "id_b", "cos"))
@@ -308,25 +300,11 @@ def lsh_cosine_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     candidates/query ~ |corpus| * tables / 2^bits; raise bits with
     corpus size, raise tables for recall."""
     wc = _widen(corpus)
-    c = _banded_sigs(wc, "neighbor_id", "cvec", dim, bits, tables,
-                     id_col, vec_col).drop("cvec")
-    q = _banded_sigs(queries, "query_id", "qvec", dim, bits, tables,
-                     id_col, vec_col).drop("qvec")
-    # dedup candidates BEFORE scoring: a pair colliding in m bands was
-    # scored m times in the r1 shape; only ids travel the band join
-    cand = (c.join(F.broadcast(q), ["band", "sig"])
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id").distinct())
+    cand = _lsh_candidates(wc, queries, dim, bits, tables, id_col, vec_col)
     cv = _prenormed(wc, id_col, vec_col, "neighbor_id", "cvec", "__cn")
     qv = _prenormed(queries, id_col, vec_col, "query_id", "qvec", "__qn")
-    joined = cand.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
-    scored = _score_pairs(joined, "qvec", "cvec", "__qn", "__cn")
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.asc("neighbor_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= k)
-        .select("query_id", "neighbor_id", "cos", "rk")
-    )
+    return _cosine_rank(
+        cand.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id"), k)
 
 
 def mips_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -337,23 +315,24 @@ def mips_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     the wrong similarity.  Brute-force baseline: broadcast the small
     query set, one codegen zip_with/aggregate dot product per pair,
     two-phase rank.  `ip` is rounded to 6 decimals BEFORE ranking
-    with an id tiebreak (the with_cosine cross-engine discipline).
+    with an id tiebreak (the _score_pairs cross-engine discipline).
 
     Scale path at 10^9+ vectors: mips_topk_lsh — the norm-augmentation
     reduction lets the unchanged hyperplane-LSH cosine index answer
     MIPS."""
-    q = queries.select(F.col(id_col).alias("query_id"),
-                       _dvec(F.col(vec_col)).alias("qvec"))
-    c = _widen(corpus).select(F.col(id_col).alias("neighbor_id"),
-                              _dvec(F.col(vec_col)).alias("cvec"))
-    joined = c.crossJoin(F.broadcast(q)).filter(
-        F.col("neighbor_id") != F.col("query_id"))
-    scored = joined.withColumn(
-        "ip", F.round(_dot(F.col("qvec"), F.col("cvec")), 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("ip"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
+    q = _prenormed(queries, id_col, vec_col, "query_id", "qvec", "__qn")
+    c = _prenormed(_widen(corpus), id_col, vec_col,
+                   "neighbor_id", "cvec", "__cn")
+    return _ip_rank(c.crossJoin(F.broadcast(q)).filter(
+        "neighbor_id != query_id"), k)
+
+
+def _ip_rank(joined: DataFrame, k: int) -> DataFrame:
+    """Each query's top k (qvec, cvec) pairs by inner product."""
+    scored = joined.withColumn("ip", F.expr(
+        f"round({_dot('qvec', 'cvec')}, 6)"))
+    return (rank_topk(scored, "query_id", k, F.desc("ip"),
+                      F.asc("neighbor_id"))
             .select("query_id", "neighbor_id", "ip", "rk"))
 
 
@@ -375,41 +354,20 @@ def mips_topk_lsh(corpus: DataFrame, queries: DataFrame, k: int = 5,
     driver action); augmentation is one concat per vector at scan
     time; the band join carries ids only (lsh_cosine_topk's shape)."""
     wc = _widen(corpus)
-    sq = F.aggregate(_dvec(F.col(vec_col)), F.lit(0.0),
-                     lambda acc, v: acc + v * v)
-    m_row = wc.select(sq.alias("__sq")).agg(
-        F.max(F.sqrt(F.col("__sq"))).alias("__m"))
-    aug_c = (wc.crossJoin(F.broadcast(m_row))
-             .select(F.col(id_col),
-                     F.concat(
-                         _dvec(F.col(vec_col)),
-                         F.array(F.sqrt(F.greatest(
-                             F.lit(0.0),
-                             F.col("__m") * F.col("__m") - sq))))
-                     .alias("__aug")))
-    aug_q = queries.select(
-        F.col(id_col),
-        F.concat(_dvec(F.col(vec_col)),
-                 F.array(F.lit(0.0))).alias("__aug"))
-    c = _banded_sigs(aug_c, "neighbor_id", "cvec", dim + 1, bits,
-                     tables, id_col, "__aug").drop("cvec")
-    q = _banded_sigs(aug_q, "query_id", "qvec", dim + 1, bits,
-                     tables, id_col, "__aug").drop("qvec")
-    cand = (c.join(F.broadcast(q), ["band", "sig"])
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id").distinct())
-    cv = wc.select(F.col(id_col).alias("neighbor_id"),
-                   _dvec(F.col(vec_col)).alias("cvec"))
-    qv = queries.select(F.col(id_col).alias("query_id"),
-                        _dvec(F.col(vec_col)).alias("qvec"))
-    joined = cand.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id")
-    scored = joined.withColumn(
-        "ip", F.round(_dot(F.col("qvec"), F.col("cvec")), 6))
-    w = Window.partitionBy("query_id").orderBy(F.desc("ip"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .select("query_id", "neighbor_id", "ip", "rk"))
+    v, sq = _dvec(vec_col), _sumsq(_dvec(vec_col))
+    m_row = wc.selectExpr(f"{sq} AS __sq").agg(
+        F.expr("max(sqrt(__sq)) AS __m"))
+    aug_c = wc.crossJoin(F.broadcast(m_row)).selectExpr(
+        f"`{id_col}`",
+        f"concat({v}, array(sqrt(greatest(0D, __m * __m - {sq})))) AS __aug")
+    aug_q = queries.selectExpr(f"`{id_col}`",
+                               f"concat({v}, array(0D)) AS __aug")
+    cand = _lsh_candidates(aug_c, aug_q, dim + 1, bits, tables, id_col,
+                           "__aug")
+    cv = _prenormed(wc, id_col, vec_col, "neighbor_id", "cvec", "__cn")
+    qv = _prenormed(queries, id_col, vec_col, "query_id", "qvec", "__qn")
+    return _ip_rank(
+        cand.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id"), k)
 
 
 def semantic_dedup(df: DataFrame, cluster_col: str,
@@ -441,16 +399,11 @@ def semantic_dedup(df: DataFrame, cluster_col: str,
     of a cluster participates; for clusters too wide for that, switch
     to ids-only pairing + fetch-vectors-by-id (the
     embedding_near_dups candidate pattern)."""
-    base = (_widen(df)
-            .select(F.col(id_col).alias("id"),
-                    F.col(cluster_col).alias("cluster"),
-                    _dvec(F.col(vec_col)).alias("v"))
-            .select("id", "cluster", "v", _norm(F.col("v")).alias("nv")))
-    a = base.select(F.col("id").alias("id_a"), "cluster",
-                    F.col("v").alias("va"), F.col("nv").alias("__na"))
-    b = base.select(F.col("id").alias("id_b"), "cluster",
-                    F.col("v").alias("vb"), F.col("nv").alias("__nb"))
-    pairs = a.join(b, "cluster").filter(F.col("id_a") < F.col("id_b"))
+    base = _prenormed(_widen(df), id_col, vec_col, "id", "v", "nv",
+                      f"`{cluster_col}` AS cluster")
+    a = base.selectExpr("id AS id_a", "cluster", "v AS va", "nv AS __na")
+    b = base.selectExpr("id AS id_b", "cluster", "v AS vb", "nv AS __nb")
+    pairs = a.join(b, "cluster").filter("id_a < id_b")
     scored = _score_pairs(pairs, "va", "vb", "__na", "__nb")
     dup = (scored.filter(F.col("cos") >= threshold)
            .groupBy("id_b").agg(F.min("id_a").alias("dup_of")))
@@ -474,21 +427,19 @@ def quantize_int8_report(df: DataFrame, vec_col: str = "embedding",
     zero Python, zero shuffle; at 10^12 vectors this runs inside the
     scan's codegen stage.  Booleans (not raw float errors) keep the
     cross-engine check robust to last-ulp accumulation differences."""
-    v = _dvec(F.col(vec_col))
-    mabs = F.array_max(F.transform(v, F.abs))
-    scale = mabs / F.lit(127.0)
+    v = _dvec(vec_col)
+    mabs = f"array_max(transform({v}, a -> abs(a)))"
+    scale = f"({mabs} / 127D)"
     # zero vectors: scale 0, dequantized = original = all zeros
-    recon = F.when(mabs == 0, v).otherwise(
-        F.transform(v, lambda x: F.round(x / scale) * scale))
-    err_max = F.array_max(F.zip_with(v, recon,
-                                     lambda x, r: F.abs(x - r)))
-    cos = F.when(mabs == 0, F.lit(1.0)).otherwise(
-        _dot(v, recon) / (_norm(v) * _norm(recon)))
-    return df.select(
-        F.col(id_col),
-        F.round(scale, 6).alias("scale"),
-        (err_max <= scale / 2 + F.lit(1e-9)).alias("err_ok"),
-        (cos >= 0.999).alias("cos_ok"))
+    recon = (f"CASE WHEN {mabs} = 0 THEN {v} ELSE "
+             f"transform({v}, e -> round(e / {scale}) * {scale}) END")
+    err_max = f"array_max(zip_with({v}, {recon}, (e, r) -> abs(e - r)))"
+    cos = (f"CASE WHEN {mabs} = 0 THEN 1D ELSE "
+           f"{_dot(v, recon)} / ({_norm(v)} * {_norm(recon)}) END")
+    return df.selectExpr(
+        f"`{id_col}`", f"round({scale}, 6) AS scale",
+        f"{err_max} <= {scale} / 2 + 1e-9D AS err_ok",
+        f"{cos} >= 0.999D AS cos_ok")
 
 
 def phash_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
@@ -525,9 +476,7 @@ def phash_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
                     F.col("a.__id").alias("corpus_id"),
                     dist.cast("int").alias("ham"))
             .dropDuplicates(["query_id", "corpus_id"]))
-    w = Window.partitionBy("query_id").orderBy("ham", "corpus_id")
-    return (cand.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k))
+    return rank_topk(cand, "query_id", k, "ham", "corpus_id")
 
 
 def hard_negatives(corpus: DataFrame, queries: DataFrame,
@@ -548,30 +497,27 @@ def hard_negatives(corpus: DataFrame, queries: DataFrame,
     not all-pairs), the corpus side streams map-side, and the only
     shuffle is the per-anchor top-k window on (anchor, cos) scalar
     rows.  For corpus-wide mining swap the candidate generator for
-    lsh_cosine_topk's banded tables; the filter/rank logic is
-    unchanged."""
-    def _pren(df, id_a, vec_a, norm_a, lbl_a):
-        # _prenormed with the label carried through (no self-join)
-        return (df.select(F.col(id_col).alias(id_a),
-                          F.col(label_col).alias(lbl_a),
-                          _dvec(F.col(vec_col)).alias(vec_a))
-                .select(id_a, lbl_a, vec_a,
-                        _norm(F.col(vec_a)).alias(norm_a)))
+    lsh_cosine_topk's banded tables (hard_negatives_lsh); the
+    filter/rank tail is shared."""
+    q = _prenormed(queries, id_col, vec_col, "query_id", "qvec", "__qn",
+                   f"`{label_col}` AS __ql")
+    c = _prenormed(_widen(corpus), id_col, vec_col, "neighbor_id", "cvec",
+                   "__cn", f"`{label_col}` AS __cl")
+    return _hard_negative_rank(c.crossJoin(F.broadcast(q)).filter(
+        "neighbor_id != query_id"), k, dup_ceiling)
 
-    q = _pren(queries, "query_id", "qvec", "__qn", "__ql")
-    c = _pren(_widen(corpus), "neighbor_id", "cvec", "__cn", "__cl")
-    joined = (c.crossJoin(F.broadcast(q))
-              .filter((F.col("neighbor_id") != F.col("query_id"))
-                      & (F.col("__cl") != F.col("__ql"))))
-    scored = _score_pairs(joined, "qvec", "cvec", "__qn", "__cn").filter(
-        F.col("cos") < dup_ceiling)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .select("query_id", F.col("__ql").alias("anchor_label"),
-                    "neighbor_id", F.col("__cl").alias("negative_label"),
-                    "cos", "rk"))
+
+def _hard_negative_rank(joined: DataFrame, k: int,
+                        dup_ceiling: float) -> DataFrame:
+    """Different label, cos below the near-dup ceiling, per-anchor
+    top k — over (query, neighbor) pairs from either candidate
+    source."""
+    scored = _score_pairs(joined.filter("__cl != __ql"),
+                          "qvec", "cvec", "__qn", "__cn")
+    return (rank_topk(scored.filter(F.col("cos") < dup_ceiling),
+                      "query_id", k, F.desc("cos"), F.asc("neighbor_id"))
+            .selectExpr("query_id", "__ql AS anchor_label", "neighbor_id",
+                        "__cl AS negative_label", "cos", "rk"))
 
 
 def hard_negatives_lsh(corpus: DataFrame, queries: DataFrame,
@@ -588,32 +534,11 @@ def hard_negatives_lsh(corpus: DataFrame, queries: DataFrame,
     / 2^bits, independent of the anchor count — the regime where the
     exact miner's broadcast corpus scan stops being affordable."""
     wc = _widen(corpus)
-    c = _banded_sigs(wc, "neighbor_id", "cvec", dim, bits, tables,
-                     id_col, vec_col).drop("cvec")
-    q = _banded_sigs(queries, "query_id", "qvec", dim, bits, tables,
-                     id_col, vec_col).drop("qvec")
-    cand = (c.join(F.broadcast(q), ["band", "sig"])
-            .filter(F.col("neighbor_id") != F.col("query_id"))
-            .select("query_id", "neighbor_id").distinct())
-    qv = (queries.select(F.col(id_col).alias("query_id"),
-                         F.col(label_col).alias("__ql"),
-                         _dvec(F.col(vec_col)).alias("qvec"))
-          .select("query_id", "__ql", "qvec",
-                  _norm(F.col("qvec")).alias("__qn")))
-    cv = (wc.select(F.col(id_col).alias("neighbor_id"),
-                    F.col(label_col).alias("__cl"),
-                    _dvec(F.col(vec_col)).alias("cvec"))
-          .select("neighbor_id", "__cl", "cvec",
-                  _norm(F.col("cvec")).alias("__cn")))
-    joined = (cand.join(F.broadcast(qv), "query_id")
-              .join(cv, "neighbor_id")
-              .filter(F.col("__cl") != F.col("__ql")))
-    scored = _score_pairs(joined, "qvec", "cvec", "__qn", "__cn").filter(
-        F.col("cos") < dup_ceiling)
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"),
-                                               F.asc("neighbor_id"))
-    return (scored.withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
-            .select("query_id", F.col("__ql").alias("anchor_label"),
-                    "neighbor_id", F.col("__cl").alias("negative_label"),
-                    "cos", "rk"))
+    cand = _lsh_candidates(wc, queries, dim, bits, tables, id_col, vec_col)
+    qv = _prenormed(queries, id_col, vec_col, "query_id", "qvec", "__qn",
+                    f"`{label_col}` AS __ql")
+    cv = _prenormed(wc, id_col, vec_col, "neighbor_id", "cvec", "__cn",
+                    f"`{label_col}` AS __cl")
+    return _hard_negative_rank(
+        cand.join(F.broadcast(qv), "query_id").join(cv, "neighbor_id"),
+        k, dup_ceiling)

@@ -25,6 +25,16 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+def rank_topk(df: DataFrame, partition_col: str, k: int,
+              *order) -> DataFrame:
+    """The one per-partition top-k window: `rk` = row_number() over
+    `partition_col` ordered by the caller's `order` columns (its own
+    tiebreak included), rows with rk <= k."""
+    w = Window.partitionBy(partition_col).orderBy(*order)
+    return df.withColumn("rk", F.row_number().over(w)).filter(
+        F.col("rk") <= k)
+
+
 def topk_per_group(df: DataFrame, group_col: str, order_col: str,
                    k: int, ascending: bool = False,
                    tiebreak_col: str | None = None) -> DataFrame:
@@ -58,9 +68,6 @@ def topk_per_group(df: DataFrame, group_col: str, order_col: str,
     pruned = df.mapInPandas(local_head, schema)
     order = (F.col(order_col).asc_nulls_last() if ascending
              else F.col(order_col).desc_nulls_last())
-    w = Window.partitionBy(group_col).orderBy(order,
-                                              F.col(tb).asc_nulls_last())
-    return (pruned
-            .withColumn("rk", F.row_number().over(w))
-            .filter(F.col("rk") <= k)
+    return (rank_topk(pruned, group_col, k, order,
+                      F.col(tb).asc_nulls_last())
             .select(*cols, "rk"))

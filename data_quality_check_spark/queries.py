@@ -3207,8 +3207,8 @@ def q_image_quality_hist(spark, sf_dir):
     return (q.select(
         b.alias("entropy_bin"),
         F.round("contrast_rms", 6).alias("contrast_rms"),
-        # blur_var can be NaN for decoded degenerate images; NaN
-        # poisons avg() where the fixture stores NULL — align to NULL
+        # the stats UDF's NaN blur_var crosses Arrow as NULL already;
+        # the guard keeps a NaN from any other source out of avg()
         F.when(~F.isnan("blur_var"),
                F.round("blur_var", 6)).alias("blur_var"),
         F.col("visual_keep").cast("int").alias("vk"))

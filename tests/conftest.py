@@ -18,6 +18,40 @@ def spark():
     s.stop()
 
 
+@pytest.fixture()
+def py4j_commands(spark):
+    """py4j commands (memory deletes excluded) that `build()` sends
+    to the JVM.  Memory-delete commands free proxies of earlier
+    objects whenever Python drops them, which gc.collect() /
+    gc.disable() around the count do not fully hold back."""
+    import gc
+
+    from py4j import protocol
+
+    client = spark.sparkContext._gateway._gateway_client
+
+    def count(build) -> int:
+        send = client.send_command
+        sent = []
+
+        def counting(command, *a, **kw):
+            if not command.startswith(protocol.MEMORY_COMMAND_NAME):
+                sent.append(command)
+            return send(command, *a, **kw)
+
+        gc.collect()
+        gc.disable()
+        client.send_command = counting
+        try:
+            build()
+        finally:
+            client.send_command = send
+            gc.enable()
+        return len(sent)
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def images_pdf():
     from data_quality_check_spark.sources import images as IM

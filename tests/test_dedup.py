@@ -4,7 +4,6 @@ SimHash / Jaccard kernels."""
 
 from __future__ import annotations
 
-import gc
 import itertools
 import random
 
@@ -424,17 +423,12 @@ def test_phash_band_keys_hypothesis(spark, hashes, max_hamming, mode):
 
 @pytest.mark.parametrize(
     "build", ["band_one", "band_two_level", "band_hybrid", "simhash64"])
-def test_driver_round_trip_budget(spark, build):
+def test_driver_round_trip_budget(spark, py4j_commands, build):
     """Building (not running) the band table and the simhash plan
     stays under 500 py4j commands: generated expressions with hundreds
     of terms go to the JVM as one SQL string, not as thousands of
     Column-DSL calls (built from those, two_level, hybrid and
-    simhash64 took 7,784 / 8,152 / 9,689 commands).
-    Memory-delete commands are not counted: they free proxies of
-    earlier objects whenever Python drops them, which gc.collect() /
-    gc.disable() around the count do not fully hold back."""
-    from py4j import protocol
-
+    simhash64 took 7,784 / 8,152 / 9,689 commands)."""
     band = spark.createDataFrame([(1, 5), (2, -1)],
                                  "image_id long, phash long")
     docs = _docs(spark)
@@ -445,24 +439,8 @@ def test_driver_round_trip_budget(spark, build):
         "band_hybrid": lambda: dedup.phash_band_table(band, 3, hybrid=True),
         "simhash64": lambda: dedup.simhash64(docs, "text", "doc_id"),
     }[build]
-    client = spark.sparkContext._gateway._gateway_client
-    send = client.send_command
-    sent = []
-
-    def counting(command, *a, **kw):
-        if not command.startswith(protocol.MEMORY_COMMAND_NAME):
-            sent.append(command)
-        return send(command, *a, **kw)
-
-    gc.collect()
-    gc.disable()
-    client.send_command = counting
-    try:
-        build_plan()
-    finally:
-        client.send_command = send
-        gc.enable()
-    assert len(sent) < 500, len(sent)
+    n = py4j_commands(build_plan)
+    assert n < 500, n
 
 
 def test_phash_hamming_fixture_counts(spark):

@@ -4,6 +4,7 @@ scale paths against the exact top-k."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from data_quality_check_spark.operators.similarity import (
@@ -146,8 +147,8 @@ def test_embedding_near_dup_lsh_prunes_at_high_threshold(spark):
     assert len(ex & got) / len(ex) >= 0.95
 
     n = cl.count()
-    a = _banded_sigs(cl, "id_a", "va", 64, 8, 16, "vec_id", "embedding").drop("va")
-    b = _banded_sigs(cl, "id_b", "vb", 64, 8, 16, "vec_id", "embedding").drop("vb")
+    a = _banded_sigs(cl, "id_a", 64, 8, 16, "vec_id", "embedding")
+    b = _banded_sigs(cl, "id_b", 64, 8, 16, "vec_id", "embedding")
     cand = (a.join(b, ["band", "sig"])
             .filter(F.col("id_a") < F.col("id_b"))
             .select("id_a", "id_b").distinct().count())
@@ -429,3 +430,63 @@ def test_mips_norm_augmentation_identity():
         cos_order = np.argsort(
             -(an @ (qa[i] / np.linalg.norm(qa[i]))), kind="stable")
         assert (ip_order == cos_order).all()
+
+
+def _seeded_vectors(spark, n=200, dim=64):
+    rng = np.random.default_rng(23)
+    E = rng.standard_normal((n, dim)).astype(np.float32)
+    df = spark.createDataFrame(
+        [(i, [float(x) for x in E[i]], i % 3) for i in range(n)],
+        "vec_id long, embedding array<float>, label int")
+    return df, E
+
+
+def test_banded_sigs_match_numpy_fold(spark):
+    """Every (id, band, sig) row equals a numpy twin that folds each
+    projection left to right (the F.aggregate order — np.dot's
+    pairwise sum could flip a sign bit near a plane).  Holds only if
+    the plane literals reach the JVM exactly."""
+    from data_quality_check_spark.operators.similarity import (
+        _banded_sigs, _hyperplanes)
+
+    df, E = _seeded_vectors(spark)
+    bits, bands = 8, 4
+    got = {(r["vec_id"], r["band"], r["sig"]) for r in _banded_sigs(
+        df, "vec_id", 64, bits, bands, "vec_id", "embedding").collect()}
+    X = E.astype(np.float64)
+    want = set()
+    for t in range(bands):
+        sig = np.zeros(len(X), dtype=np.int64)
+        for b, plane in enumerate(_hyperplanes(64, bits, seed=t)):
+            acc = np.zeros(len(X))
+            for i in range(X.shape[1]):
+                acc = acc + X[:, i] * plane[i]
+            sig += np.where(acc > 0.0, 1 << b, 0)
+        want |= {(i, t, int(s)) for i, s in enumerate(sig)}
+    assert got == want
+
+
+@pytest.mark.parametrize("build", [
+    "lsh_cosine_topk", "mips_topk_lsh", "hard_negatives_lsh",
+    "embedding_near_dups", "centroid_cell16"])
+def test_ann_build_round_trip_budget(spark, py4j_commands, build):
+    """Building (not running) an LSH or IVF plan stays under 500 py4j
+    commands: the literal hyperplanes and every higher-order
+    expression go to the JVM as SQL text (as Column-DSL calls the
+    three top-k builds took ~21,500 commands, embedding_near_dups
+    107,768, a 16-centroid cell 7,195)."""
+    from data_quality_check_spark.operators import similarity as S
+
+    df, _ = _seeded_vectors(spark, n=8)
+    q = df.limit(2)
+    C = np.random.default_rng(3).standard_normal((16, 64))
+    build_plan = {
+        "lsh_cosine_topk": lambda: S.lsh_cosine_topk(df, q),
+        "mips_topk_lsh": lambda: S.mips_topk_lsh(df, q),
+        "hard_negatives_lsh": lambda: S.hard_negatives_lsh(df, q),
+        "embedding_near_dups": lambda: S.embedding_near_dups(df),
+        "centroid_cell16": lambda: S._with_centroid_cell(
+            df, "embedding", C),
+    }[build]
+    n = py4j_commands(build_plan)
+    assert n < 500, n

@@ -32,7 +32,11 @@ def test_cross_batch_dedup(spark, dirs):
     for i, chunk in enumerate((pdf.iloc[:500], pdf.iloc[500:])):
         tbl = pa.Table.from_pandas(chunk, schema=IM.ARROW_SCHEMA,
                                    preserve_index=False)
-        pq.write_table(tbl, os.path.join(ind, f"shard{i}.parquet"))
+        path = os.path.join(ind, f"shard{i}.parquet")
+        pq.write_table(tbl, path)
+        # the file source orders files by mtime: make the arrival order
+        # explicit instead of relying on the clock's resolution
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
 
     stream = (spark.readStream.schema(IM.IMAGES_DDL)
               .option("maxFilesPerTrigger", 1).parquet(ind))
@@ -83,8 +87,11 @@ def test_cross_batch_near_dup_candidates(spark, dirs):
                                 "another unrelated caption about a dog "
                                 "on the beach in summer"]})
     for i, chunk in enumerate((b1, b2)):
+        path = os.path.join(ind, f"docs{i}.parquet")
         pq.write_table(pa.Table.from_pandas(chunk, preserve_index=False),
-                       os.path.join(ind, f"docs{i}.parquet"))
+                       path)
+        # pinned arrival order, as in test_cross_batch_dedup
+        os.utime(path, (1_700_000_000 + i, 1_700_000_000 + i))
 
     stream = (spark.readStream.schema("doc_id long, text string")
               .option("maxFilesPerTrigger", 1).parquet(ind))
